@@ -1677,6 +1677,9 @@ object SnapshotTable {
       files: Seq[String], append: Boolean = false): String = {
     val path = bloomIndexPath(table, column)
     spark.read.parquet(files: _*)
+      // A NULL key never satisfies a point probe, and would land as a
+      // NULL word the index reader cannot decode.
+      .filter(col(column).isNotNull)
       .select(input_file_name().as("f"),
         explode(bloomPositionsCol(col(column))).as("p"))
       .select(col("f"), expr("p div 32").as("word"),
@@ -1960,16 +1963,42 @@ object SnapshotTable {
     * footer job the mergeSchema option launches costs ~60-150 ms per
     * call and schema resolution runs per SQL-statement table load —
     * at 100 TB the catalog serves this from table metadata anyway.
+    * The memo is LRU-bounded at [[FileSchemaCacheMax]] files, so a
+    * long-lived session touching ever more files keeps bounded driver
+    * memory.
     */
-  private val fileSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+  private val fileSchemaCache =
+    new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
+        64, 0.75f, /* accessOrder = */ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String,
+          org.apache.spark.sql.types.StructType]): Boolean =
+        size() > FileSchemaCacheMax
+    }
+
+  /** [[fileSchemaCache]]'s bound: at a few KB of schema per file the
+    * cap costs a few MB at most, and it stays above the file count of
+    * any one generation the drills and benchmarks resolve (a larger
+    * generation only re-reads footers; results never change).
+    */
+  private[graft] val FileSchemaCacheMax = 1024
+
+  private[graft] def fileSchemaCacheSize: Int =
+    fileSchemaCache.synchronized(fileSchemaCache.size())
 
   def mergedFooterSchema(spark: SparkSession,
       files: Seq[String]): org.apache.spark.sql.types.StructType = {
     require(files.nonEmpty, "mergedFooterSchema needs at least one file")
     files.iterator
-      .map(f => fileSchemaCache.computeIfAbsent(f,
-        p => spark.read.parquet(p).schema))
+      .map { f =>
+        // The footer read runs outside the lock, so concurrent
+        // resolutions never serialize on I/O.
+        fileSchemaCache.synchronized(Option(fileSchemaCache.get(f)))
+          .getOrElse {
+            val schema = spark.read.parquet(f).schema
+            fileSchemaCache.synchronized(fileSchemaCache.put(f, schema))
+            schema
+          }
+      }
       .reduceLeft(org.apache.spark.sql.GraftBridge.mergeSchemas)
   }
 

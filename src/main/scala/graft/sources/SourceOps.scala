@@ -816,7 +816,8 @@ object SourceOps {
         val blocks = r.getFooter.getBlocks.asScala
         (blocks.size.toLong, blocks.count(b =>
           graft.streaming.SnapshotColumnarReader.groupAdmits(
-            Map("o_orderkey" -> ((lo, hi))), Map.empty, b)).toLong)
+            graft.streaming.PushedPredicates(
+              bounds = Map("o_orderkey" -> ((lo, hi)))), b)).toLong)
       } finally r.close()
     require(total >= 4,
       s"row-group fixture must span several groups; got $total " +
@@ -1077,7 +1078,7 @@ object SourceOps {
     * footers' INT32 date statistics; the probe arrives as a plain
     * `BETWEEN DATE ... AND DATE ...` pushed through the connector,
     * translated to the physical epoch-day domain
-    * ([[graft.streaming.SnapshotSource.physicalLong]]). The
+    * ([[graft.streaming.PushedPredicates.physicalLong]]). The
     * planned-file count is read off the EXECUTED DSv2 plan and
     * value-gated against the oracle's relational recompute of the
     * slice admission — a planner that failed to translate the date
@@ -1905,7 +1906,8 @@ object SourceOps {
   def connectorSpj(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val s = spark.newSession()
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    s.conf.set(
+      org.apache.spark.sql.internal.SQLConf.V2_BUCKETING_ENABLED.key, "true")
     s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val cat = ensureCatalog(s)
@@ -2926,7 +2928,7 @@ object SourceOps {
     * sidecar indexes the string column (the build side always hashed
     * `k.cast("string")`, so the on-disk index needs nothing new), and
     * the probe arrives as a pushed `sid = '...'` whose literal IS the
-    * rendered key ([[graft.streaming.SnapshotSource.strProbesOf]]).
+    * rendered key ([[graft.streaming.PushedPredicates.of]]).
     * Without this translation the same statement scans EVERY file of a
     * 100 TB table — zone maps are integer-domain and can never help a
     * string key. The planned-file count comes from the connector's own

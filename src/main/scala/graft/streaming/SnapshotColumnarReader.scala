@@ -28,8 +28,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 private[streaming] class SnapshotColumnarReader(path: String,
     schema: StructType, conf: Configuration,
     batchSize: Int = 4096,
-    bounds: Map[String, (Long, Long)] = Map.empty,
-    probes: Map[String, Seq[Long]] = Map.empty,
+    pushed: PushedPredicates = PushedPredicates.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
@@ -112,7 +111,7 @@ private[streaming] class SnapshotColumnarReader(path: String,
 
   private def advanceRowGroup(): Boolean = {
     def groupAdmits(b: org.apache.parquet.hadoop.metadata.BlockMetaData) =
-      SnapshotColumnarReader.groupAdmits(bounds, probes, b)
+      SnapshotColumnarReader.groupAdmits(pushed, b)
     while (blockIdx < blocks.size() && !groupAdmits(blocks.get(blockIdx))) {
       reader.skipNextRowGroup()
       blockIdx += 1
@@ -310,10 +309,9 @@ private[graft] object SnapshotColumnarReader {
     * column absent from the file (pre-evolution), with no recorded
     * stats, or of a non-integer physical type admits conservatively.
     */
-  private[graft] def groupAdmits(bounds: Map[String, (Long, Long)],
-      probes: Map[String, Seq[Long]],
+  private[graft] def groupAdmits(pushed: PushedPredicates,
       b: org.apache.parquet.hadoop.metadata.BlockMetaData): Boolean = {
-    if (bounds.isEmpty && probes.isEmpty) return true
+    if (pushed.bounds.isEmpty && pushed.probes.isEmpty) return true
     import scala.jdk.CollectionConverters._
     val cols = b.getColumns.asScala
     def statsOf(c: String): Option[(Long, Long)] =
@@ -328,9 +326,9 @@ private[graft] object SnapshotColumnarReader {
           case _ => None
         }
       }
-    bounds.forall { case (c, (lo, hi)) =>
+    pushed.bounds.forall { case (c, (lo, hi)) =>
       statsOf(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    } && probes.forall { case (c, vs) =>
+    } && pushed.probes.forall { case (c, vs) =>
       statsOf(c).forall { case (mn, mx) =>
         vs.exists(v => v >= mn && v <= mx) }
     }

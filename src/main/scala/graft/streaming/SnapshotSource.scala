@@ -13,11 +13,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns, SupportsPushDownV2Filters}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -314,94 +313,9 @@ private[graft] object SnapshotSource {
     new SerializableConfiguration(
       SparkSession.active.sessionState.newHadoopConf())
 
-  /** A pushed comparison LITERAL as the column's PHYSICAL long — the
-    * domain every stats layer here lives in (manifest zone maps,
-    * row-group footer statistics): integers directly; DATE as epoch
-    * days (INT32 physical); TIMESTAMP as epoch micros (the connector
-    * writer's INT64 form — files storing INT96 carry no usable stats
-    * and admit conservatively anyway); DECIMAL as the unscaled value
-    * at the COLUMN's scale, EXACT-OR-REFUSE: a literal that would need
-    * rescaling/rounding yields None and pruning degrades to
-    * admit-everything, because a wrong unscaled bound would skip files
-    * holding matching rows — the one failure pruning must never have.
-    */
-  def physicalLong(dt: Option[DataType], v: Any): Option[Long] = v match {
-    case l: java.lang.Long => Some(l.longValue)
-    case i: java.lang.Integer => Some(i.longValue)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => Some(d.toEpochDay)
-    case t: java.sql.Timestamp =>
-      Some(Math.addExact(
-        Math.multiplyExact(Math.floorDiv(t.getTime, 1000L), 1000000L),
-        (t.getNanos / 1000).toLong))
-    case t: java.time.Instant =>
-      Some(Math.addExact(
-        Math.multiplyExact(t.getEpochSecond, 1000000L),
-        (t.getNano / 1000).toLong))
-    case b: java.math.BigDecimal => dt match {
-      case Some(d: DecimalType) =>
-        try Some(b.setScale(d.scale).unscaledValue.longValueExact)
-        catch { case _: ArithmeticException => None }
-      case _ => None
-    }
-    case d: org.apache.spark.sql.types.Decimal => dt match {
-      // The V2-literal form (Catalyst-internal value): rescale to the
-      // column's scale exactly or refuse.
-      case Some(t: DecimalType) =>
-        try Some(d.toJavaBigDecimal.setScale(t.scale)
-          .unscaledValue.longValueExact)
-        catch { case _: ArithmeticException => None }
-      case _ => None
-    }
-    case _ => None
-  }
-
-  /** A pushed filter as a zone-map bound: `Some(column -> (lo, hi))`
-    * for comparisons [[physicalLong]] can translate into the column's
-    * physical domain — integer, date, timestamp and exact-scale
-    * decimal literals all prune.
-    */
-  def boundOf(f: Filter,
-      typeOf: String => Option[DataType] = _ => None): Option[(String, (Long, Long))] = {
-    def p(c: String, v: Any): Option[Long] = physicalLong(typeOf(c), v)
-    f match {
-      case EqualTo(c, v) => p(c, v).map(l => c -> ((l, l)))
-      case GreaterThan(c, v) =>
-        p(c, v).filter(_ < Long.MaxValue).map(l => c -> ((l + 1, Long.MaxValue)))
-      case GreaterThanOrEqual(c, v) => p(c, v).map(l => c -> ((l, Long.MaxValue)))
-      case LessThan(c, v) =>
-        p(c, v).filter(_ > Long.MinValue).map(l => c -> ((Long.MinValue, l - 1)))
-      case LessThanOrEqual(c, v) => p(c, v).map(l => c -> ((Long.MinValue, l)))
-      // An IN list prunes zone maps by its envelope [min, max] —
-      // conservative (a file spanning the gap between two values still
-      // admits), but the bloom probe below handles the exact membership.
-      case In(c, vs) if vs.nonEmpty =>
-        val ls = vs.toSeq.map(v => p(c, v))
-        if (ls.forall(_.isDefined)) {
-          val l = ls.flatten
-          Some(c -> ((l.min, l.max)))
-        } else None
-      case _ => None
-    }
-  }
-
-  /** Conjunctive fold of the pushed filters into per-column bounds
-    * (interval intersection per column).
-    */
-  def boundsOf(filters: Array[Filter],
-      schema: StructType = new StructType()): Map[String, (Long, Long)] = {
-    val typeOf: String => Option[DataType] =
-      c => schema.fields.find(_.name == c).map(_.dataType)
-    filters.flatMap(boundOf(_, typeOf)).groupBy(_._1).map { case (c, bs) =>
-      c -> ((bs.map(_._2._1).max, bs.map(_._2._2).min))
-    }
-  }
-
-  /** [[boundOf]] over V2 predicates (the DELETE pushdown form):
-    * per-column zone bounds from the integer comparisons in the
-    * conjunction, every unrecognized conjunct conservatively ignored —
-    * SOUND for pruning because a file that cannot satisfy one conjunct
-    * cannot satisfy the AND of all of them.
+  /** The column a V2 expression names, when it is a single-part
+    * reference — the shape every pushdown this connector accepts
+    * (predicates, TopN orders, aggregate arguments) requires.
     */
   private[streaming] def v2Col(
       e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
@@ -410,227 +324,6 @@ private[graft] object SnapshotSource {
           if r.fieldNames.length == 1 => Some(r.fieldNames.head)
       case _ => None
     }
-
-  private def v2Long(
-      e: org.apache.spark.sql.connector.expressions.Expression): Option[Long] =
-    e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        l.value() match {
-          case v: java.lang.Long => Some(v.longValue)
-          case v: java.lang.Integer => Some(v.longValue)
-          case _ => None
-        }
-      case _ => None
-    }
-
-  /** [[v2Long]] widened through [[physicalLong]]: V2 literals carry
-    * Catalyst-INTERNAL values (dates already Int days, timestamps Long
-    * micros — covered by the integer cases — and decimals as
-    * `Decimal`, rescaled to the column's scale exactly or refused).
-    */
-  private def v2PhysLong(
-      e: org.apache.spark.sql.connector.expressions.Expression,
-      dt: Option[DataType]): Option[Long] =
-    e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        physicalLong(dt, l.value())
-      case _ => None
-    }
-
-  def v2BoundsOf(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate],
-      schema: StructType = new StructType())
-      : Map[String, (Long, Long)] = {
-    val typeOf: String => Option[DataType] =
-      c => schema.fields.find(_.name == c).map(_.dataType)
-    def one(
-        p: org.apache.spark.sql.connector.expressions.filter.Predicate)
-        : Seq[(String, (Long, Long))] = p.name() match {
-      case "AND" => p.children().toSeq.collect {
-        case q: org.apache.spark.sql.connector.expressions.filter.Predicate => q
-      }.flatMap(one)
-      case op @ ("=" | ">" | ">=" | "<" | "<=") => p.children() match {
-        case Array(a, b) => (v2Col(a), v2Col(a).flatMap(c =>
-            v2PhysLong(b, typeOf(c)))) match {
-          case (Some(c), Some(v)) => op match {
-            case "=" => Seq(c -> ((v, v)))
-            case ">" if v < Long.MaxValue => Seq(c -> ((v + 1, Long.MaxValue)))
-            case ">=" => Seq(c -> ((v, Long.MaxValue)))
-            case "<" if v > Long.MinValue => Seq(c -> ((Long.MinValue, v - 1)))
-            case "<=" => Seq(c -> ((Long.MinValue, v)))
-            case _ => Seq.empty
-          }
-          case _ => Seq.empty
-        }
-        case _ => Seq.empty
-      }
-      // An IN list prunes zone maps by its [min, max] envelope — the
-      // V1 boundOf rule, and the shape every RUNTIME filter arrives in
-      // (translateRuntimeFilterV2 renders the build side's keys as one
-      // IN over literals); the bloom probes handle exact membership.
-      case "IN" => p.children() match {
-        case Array(a, rest @ _*) =>
-          v2Col(a) match {
-            case Some(c) =>
-              val ls = rest.map(v2PhysLong(_, typeOf(c)))
-              if (ls.nonEmpty && ls.forall(_.isDefined)) {
-                val l = ls.flatten
-                Seq(c -> ((l.min, l.max)))
-              } else Seq.empty
-            case None => Seq.empty
-          }
-        case _ => Seq.empty
-      }
-      case _ => Seq.empty
-    }
-    predicates.flatMap(one).groupBy(_._1).map { case (c, bs) =>
-      c -> ((bs.map(_._2._1).max, bs.map(_._2._2).min))
-    }
-  }
-
-  /** [[probesOf]] over V2 predicates — the DELETE pushdown's
-    * file-level BLOOM hook, mirroring the batch scan's: exact point
-    * probes from `=` / `IN` conjuncts on integer columns (several
-    * probes on one column intersect). Unrecognized conjuncts are
-    * ignored, which is SOUND for pruning (a file admitted by the
-    * recognized conjuncts is a superset of files satisfying the AND).
-    */
-  def v2ProbesOf(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Map[String, Seq[Long]] = {
-    def one(
-        p: org.apache.spark.sql.connector.expressions.filter.Predicate)
-        : Seq[(String, Seq[Long])] = p.name() match {
-      case "AND" => p.children().toSeq.collect {
-        case q: org.apache.spark.sql.connector.expressions.filter.Predicate => q
-      }.flatMap(one)
-      case "=" => p.children() match {
-        case Array(a, b) => (v2Col(a), v2Long(b)) match {
-          case (Some(c), Some(v)) => Seq(c -> Seq(v))
-          case _ => Seq.empty
-        }
-        case _ => Seq.empty
-      }
-      case "IN" => p.children() match {
-        case Array(a, rest @ _*) =>
-          val vs = rest.map(v2Long)
-          (v2Col(a), vs) match {
-            case (Some(c), ls) if ls.nonEmpty && ls.forall(_.isDefined) =>
-              Seq(c -> ls.flatten.toSeq)
-            case _ => Seq.empty
-          }
-        case _ => Seq.empty
-      }
-      case _ => Seq.empty
-    }
-    predicates.flatMap(one).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
-  }
-
-  /** An IN list's values as longs, when every member is an integer
-    * literal (the types the bloom sidecar hashes portably).
-    */
-  private def probeValues(vs: Array[Any]): Option[Seq[Long]] =
-    if (vs.nonEmpty && vs.forall(v =>
-        v.isInstanceOf[java.lang.Long] || v.isInstanceOf[java.lang.Integer]))
-      Some(vs.toSeq.map {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.longValue
-      })
-    else None
-
-  /** Pushed filters as exact POINT probes — the file-level bloom
-    * pruning hook: `EqualTo`/`In` on integer columns. Several probe
-    * filters on one column conjoin, so their value sets intersect; an
-    * empty intersection (`c = 1 AND c IN (2)`) is an unsatisfiable
-    * scan the planner may serve with zero files.
-    */
-  def probesOf(filters: Array[Filter]): Map[String, Seq[Long]] = {
-    def valuesOf(f: Filter): Option[(String, Seq[Long])] = f match {
-      case EqualTo(c, v: Long) => Some(c -> Seq(v))
-      case EqualTo(c, v: Int) => Some(c -> Seq(v.toLong))
-      case In(c, vs) => probeValues(vs).map(c -> _)
-      case _ => None
-    }
-    filters.flatMap(valuesOf).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
-  }
-
-  /** Pushed filters as STRING point probes — the bloom hook for string
-    * key columns (`WHERE doc_id = '...'`, the dominant point-lookup
-    * shape in an LLM data pipeline, where keys are URLs/doc ids): the
-    * build side hashes `k.cast("string")`, which is the IDENTITY on a
-    * string column, so the pushed literal IS the rendered probe key.
-    * Equality/IN only; several probe filters on one column intersect.
-    * Strings never participate in zone-map or row-group range pruning
-    * (byte-wise truncated binary stats are not worth the soundness
-    * risk) — bloom membership is the string pruning axis.
-    */
-  def strProbesOf(filters: Array[Filter]): Map[String, Seq[String]] = {
-    def valuesOf(f: Filter): Option[(String, Seq[String])] = f match {
-      case EqualTo(c, v: String) => Some(c -> Seq(v))
-      case EqualTo(c, v: UTF8String) => Some(c -> Seq(v.toString))
-      case In(c, vs) if vs.nonEmpty && vs.forall(v =>
-          v.isInstanceOf[String] || v.isInstanceOf[UTF8String]) =>
-        Some(c -> vs.toSeq.map(_.toString))
-      case _ => None
-    }
-    filters.flatMap(valuesOf).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
-  }
-
-  /** [[strProbesOf]] over V2 predicates (the DELETE pushdown and
-    * runtime-filter form): string literals arrive as Catalyst-internal
-    * `UTF8String`s. Same conjunction/intersection rules as
-    * [[v2ProbesOf]]; unrecognized conjuncts are ignored (sound — the
-    * admitted set is a superset of the AND's matches).
-    */
-  def v2StrProbesOf(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Map[String, Seq[String]] = {
-    def v2Str(
-        e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-          l.value() match {
-            case v: UTF8String => Some(v.toString)
-            case v: String => Some(v)
-            case _ => None
-          }
-        case _ => None
-      }
-    def one(
-        p: org.apache.spark.sql.connector.expressions.filter.Predicate)
-        : Seq[(String, Seq[String])] = p.name() match {
-      case "AND" => p.children().toSeq.collect {
-        case q: org.apache.spark.sql.connector.expressions.filter.Predicate => q
-      }.flatMap(one)
-      case "=" => p.children() match {
-        case Array(a, b) => (v2Col(a), v2Str(b)) match {
-          case (Some(c), Some(v)) => Seq(c -> Seq(v))
-          case _ => Seq.empty
-        }
-        case _ => Seq.empty
-      }
-      case "IN" => p.children() match {
-        case Array(a, rest @ _*) =>
-          val vs = rest.map(v2Str)
-          (v2Col(a), vs) match {
-            case (Some(c), ls) if ls.nonEmpty && ls.forall(_.isDefined) =>
-              Seq(c -> ls.flatten.toSeq)
-            case _ => Seq.empty
-          }
-        case _ => Seq.empty
-      }
-      case _ => Seq.empty
-    }
-    predicates.flatMap(one).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
-  }
 
   /** Full-content commits (INSERT OVERWRITE, CTAS) reduce their staged
     * files to `(files to publish, husks to delete)`: zero-row husks
@@ -808,7 +501,14 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Option[String] =
     try {
-      val b = new org.apache.spark.sql.connector.util.V2ExpressionSQLBuilder
+      // Literals render through Catalyst's own `Literal.sql`, which
+      // parses back to the same typed value; the builder's default
+      // prints the internal value (a DATE as its epoch-day INT).
+      val b = new org.apache.spark.sql.connector.util.V2ExpressionSQLBuilder {
+        override protected def visitLiteral(
+            l: org.apache.spark.sql.connector.expressions.Literal[_]): String =
+          org.apache.spark.sql.catalyst.expressions.Literal(l.value(), l.dataType()).sql
+      }
       val parts = predicates.map(b.build)
       Some(if (parts.isEmpty) "TRUE" else parts.map(p => s"($p)").mkString(" AND "))
     } catch { case _: Exception => None }
@@ -870,30 +570,11 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
     // whole-snapshot path, whose readAs guards own those semantics.
     val (dataFiles, tombstones, segmented) =
       SnapshotTable.tailEntries(spark, table, latest)
-    val bounds = SnapshotSource.v2BoundsOf(predicates, tableSchema)
-    val probes = SnapshotSource.v2ProbesOf(predicates)
-    val strProbes = SnapshotSource.v2StrProbesOf(predicates)
-    if (!segmented && tombstones.isEmpty &&
-        (bounds.nonEmpty || probes.nonEmpty || strProbes.nonEmpty)) {
-      // Two-level skipping, exactly the batch scan's: zone-map bounds
-      // first, then the bloom sidecars for the point probes (the case
-      // zone maps cannot prune when every file spans the domain) —
-      // integer and string keys alike.
-      val longAdmitted = probes.foldLeft(
-          SnapshotTable.admittedFiles(spark, table, latest, bounds)) {
-        case (files, (c, vs)) =>
-          if (vs.isEmpty) Seq.empty
-          else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-            SnapshotTable.bloomAdmittedFiles(spark, table, c, vs, files)
-          else files
-      }
-      val affected = strProbes.foldLeft(longAdmitted) {
-        case (files, (c, vs)) =>
-          if (vs.isEmpty) Seq.empty
-          else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-            SnapshotTable.bloomAdmittedFilesRendered(spark, table, c, vs, files)
-          else files
-      }
+    val pushed = PushedPredicates.of(predicates, tableSchema)
+    if (!segmented && tombstones.isEmpty && pushed.nonEmpty) {
+      // Exactly the batch scan's file admission (zone maps, then bloom
+      // sidecars).
+      val affected = pushed.admittedFiles(spark, table, latest)
       val untouched = dataFiles.distinct.toSet -- affected
       if (untouched.nonEmpty) {
         val gen = latest + 1
@@ -1094,48 +775,31 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
       "startingGeneration and startingTimestamp are mutually exclusive")
     require(startingGeneration.forall(_ >= 1L),
       "startingGeneration must be >= 1")
-    // Column pruning reaches the row decoder: readers resolve and
-    // convert ONLY the pruned schema's fields, so a 2-column
-    // projection over a wide table skips the other columns' value
-    // materialization entirely (the Group assembly still parses the
-    // row group; production columnar decode would skip the pages too —
-    // the pruning CONTRACT is what this connector pins). Filter
-    // pushdown prunes FILES through the manifest's zone maps
-    // (stats manifests only): pushed comparisons fold into per-column
-    // [lo, hi] bounds and batch planning admits only files whose
-    // recorded range intersects — pruning is best-effort and every
-    // filter is ALSO returned as a residual, so Spark re-applies the
-    // row-level predicate and correctness never rests on the stats.
-    new ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownFilters
+    // Column pruning reaches the decoders: readers convert only the
+    // pruned schema's fields, and the columnar reader never fetches an
+    // unrequested column's pages. Predicate pushdown is V2 only
+    // ([[SnapshotScanBuilder]]): the pushed conjuncts translate once
+    // into [[PushedPredicates]], batch planning admits files through
+    // the manifest zone maps and bloom sidecars, and the readers skip
+    // row groups off footer statistics. Every predicate is ALSO a
+    // residual, so correctness never rests on the stats.
+    new SnapshotScanBuilder(tableSchema)
         with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
         with org.apache.spark.sql.connector.read.SupportsPushDownLimit
         with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
-      private var required: StructType = tableSchema
-      private var pushed: Array[Filter] = Array.empty
-      // Whether Spark pushed ANY filter at all — including classes
-      // boundOf cannot translate: the count pushdown must refuse on
-      // this flag, not on the boundable subset, or a future change
-      // that CONSUMES an untranslatable filter would silently serve
-      // the unfiltered table count.
-      private var sawFilters = false
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        sawFilters = filters.nonEmpty
+      override def pushPredicates(
+          predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
+          : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] = {
         // Telemetry freshness: a filtered statement never reaches
         // pushAggregation (Spark blocks aggregate pushdown under
         // residual filters), so the per-table log would otherwise
         // retain a stale 'true' from an earlier unfiltered count —
         // record the refusal HERE so the entry always reflects the
         // most recent statement that planned this table.
-        if (sawFilters) SnapshotSource.recordCountPushdown(table, served = false)
-        pushed = filters.filter(f => SnapshotSource.boundOf(f,
-          c => tableSchema.fields.find(_.name == c).map(_.dataType)).isDefined ||
-          SnapshotSource.strProbesOf(Array(f)).nonEmpty)
-        filters
+        if (predicates.nonEmpty)
+          SnapshotSource.recordCountPushdown(table, served = false)
+        super.pushPredicates(predicates)
       }
-      override def pushedFilters(): Array[Filter] = pushed
 
       // LIMIT pushdown as a FILE-COUNT prune: `SELECT ... LIMIT n`
       // with no filters plans only enough files (by the manifest's
@@ -1150,7 +814,7 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
       // count-pushdown posture).
       private var limitFiles: Option[Int] = None
       override def pushLimit(limit: Int): Boolean = {
-        if (sawFilters || limit <= 0) false
+        if (sawPredicates || limit <= 0) false
         else {
           limitFiles = Some(limit)
           true
@@ -1172,7 +836,7 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
           orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
           limit: Int): Boolean = {
         import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
-        if (sawFilters || limit <= 0 || orders.length != 1) false
+        if (sawPredicates || limit <= 0 || orders.length != 1) false
         else {
           val o = orders.head
           SnapshotSource.v2Col(o.expression()) match {
@@ -1241,7 +905,7 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
           catch { case _: Exception => None }
         })
       /** A folded physical long back as the column's Catalyst-internal
-        * value — [[SnapshotSource.physicalLong]]'s exact inverse for
+        * value — [[PushedPredicates.physicalLong]]'s exact inverse for
         * the types zone maps record; anything else refuses.
         */
       private def internalOf(dt: DataType, v: Long): Option[Any] = dt match {
@@ -1263,7 +927,7 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
           agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
           : Option[(StructType, Array[Any])] = {
         import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-        if (sawFilters || agg.groupByExpressions().nonEmpty) return None
+        if (sawPredicates || agg.groupByExpressions().nonEmpty) return None
         val exprs = agg.aggregateExpressions()
         if (exprs.isEmpty) return None
         def minMax(col: org.apache.spark.sql.connector.expressions.Expression,
@@ -1346,21 +1010,14 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
         override def filter(
             predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
             : Unit =
-          batch.applyRuntimeFilters(
-            SnapshotSource.v2BoundsOf(predicates, tableSchema),
-            SnapshotSource.v2ProbesOf(predicates),
-            SnapshotSource.v2StrProbesOf(predicates))
+          batch.applyRuntimeFilters(predicates)
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new SnapshotMicroBatchStream(table, required, skipRewrites,
             maxGensPerBatch, maxFilesPerBatch, maxBytesPerBatch,
             startingGeneration, startingTimestamp,
             SnapshotSource.aliasMapOf(tableSchema))
         private val batch = new SnapshotBatch(table, required, generation,
-          SnapshotSource.boundsOf(pushed, tableSchema),
-          SnapshotSource.probesOf(pushed),
-          SnapshotSource.strProbesOf(pushed),
-          SnapshotSource.aliasMapOf(tableSchema),
-          limitFiles, topNSpec)
+          pushed, SnapshotSource.aliasMapOf(tableSchema), limitFiles, topNSpec)
         override def toBatch: Batch = batch
         // POST-PRUNING size estimate, served from the MANIFEST's
         // recorded per-file stats (one manifest read covers every
@@ -1415,6 +1072,46 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
   }
 }
 
+/** The pushdown both snapshot scan builders (the table's and the
+  * row-level operation's) share: column pruning, and V2 predicate
+  * pushdown translated ONCE into [[PushedPredicates]]. Pruning is
+  * best-effort and every predicate is ALSO returned as a residual, so
+  * Spark re-applies it row by row and correctness never rests on the
+  * stats.
+  */
+private[streaming] abstract class SnapshotScanBuilder(tableSchema: StructType)
+    extends ScanBuilder with SupportsPushDownRequiredColumns
+    with SupportsPushDownV2Filters {
+  protected var required: StructType = tableSchema
+  protected var pushed: PushedPredicates = PushedPredicates.empty
+  // Whether Spark pushed ANY predicate at all — including ones the
+  // translation ignores: the count/limit/TopN pushdowns must refuse on
+  // this flag, not on the translated subset, or a future change that
+  // CONSUMES an untranslated predicate would silently serve unfiltered
+  // rows.
+  protected var sawPredicates = false
+  private var translated
+      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
+    Array.empty
+
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = requiredSchema
+
+  override def pushPredicates(
+      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
+      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] = {
+    sawPredicates = predicates.nonEmpty
+    translated = predicates.filter(p =>
+      PushedPredicates.of(Array(p), tableSchema).nonEmpty)
+    pushed = PushedPredicates.of(translated, tableSchema)
+    predicates
+  }
+
+  override def pushedPredicates()
+      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
+    translated
+}
+
 /** Batch scan AS OF a generation (latest by default): the planned
   * partitions are exactly the manifest's files — the same snapshot
   * isolation [[SnapshotTable.readAs]] provides, but through the
@@ -1423,44 +1120,23 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
   */
 private[streaming] class SnapshotBatch(table: String, schema: StructType,
     generation: Option[Long],
-    bounds: Map[String, (Long, Long)] = Map.empty,
-    probes: Map[String, Seq[Long]] = Map.empty,
-    strProbes: Map[String, Seq[String]] = Map.empty,
+    pushed: PushedPredicates = PushedPredicates.empty,
     aliases: Map[String, Seq[String]] = Map.empty,
     limit: Option[Int] = None,
     topN: Option[(String, Boolean, Int)] = None) extends Batch {
 
-  // RUNTIME filters (SupportsRuntimeV2Filtering): bounds/probes derived
-  // from a join's build side AFTER it executes, intersected with the
+  // RUNTIME filters (SupportsRuntimeV2Filtering): predicates from a
+  // join's build side AFTER it executes, conjoined with the
   // compile-time pushdown before planning. Sound for the same reason
   // the static filters are: both only SKIP files their conjunct proves
   // row-free, and Spark still evaluates the join itself row-level.
-  @volatile private var rtBounds: Map[String, (Long, Long)] = Map.empty
-  @volatile private var rtProbes: Map[String, Seq[Long]] = Map.empty
-  @volatile private var rtStrProbes: Map[String, Seq[String]] = Map.empty
+  // Spark only offers them on [[indexedColumns]], all in `schema`.
+  @volatile private var runtime: PushedPredicates = PushedPredicates.empty
 
-  private[streaming] def applyRuntimeFilters(b: Map[String, (Long, Long)],
-      p: Map[String, Seq[Long]],
-      s: Map[String, Seq[String]] = Map.empty): Unit = {
-    rtBounds = b
-    rtProbes = p
-    rtStrProbes = s
-  }
-
-  private def mergedBounds: Map[String, (Long, Long)] =
-    (bounds.toSeq ++ rtBounds.toSeq).groupBy(_._1).map { case (c, bs) =>
-      c -> ((bs.map(_._2._1).max, bs.map(_._2._2).min))
-    }
-
-  private def mergedProbes: Map[String, Seq[Long]] =
-    (probes.toSeq ++ rtProbes.toSeq).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
-
-  private def mergedStrProbes: Map[String, Seq[String]] =
-    (strProbes.toSeq ++ rtStrProbes.toSeq).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
+  private[streaming] def applyRuntimeFilters(
+      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
+      : Unit =
+    runtime = PushedPredicates.of(predicates, schema)
 
   /** STORAGE-PARTITIONED-JOIN grouping: `(column, int-width, value →
     * files)` when this scan can be served as one input partition per
@@ -1481,10 +1157,8 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
       // the reported partitioning anyway, and a pristine scan should
       // keep one partition PER FILE — collapsing to one-per-value
       // would cap parallelism at the value count for no benefit.
-      if (bounds.nonEmpty || probes.nonEmpty || strProbes.nonEmpty ||
-          limit.isDefined || topN.isDefined ||
-          !spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false")
-            .toBoolean) None
+      if (pushed.nonEmpty || limit.isDefined || topN.isDefined ||
+          !spark.sessionState.conf.v2BucketingEnabled) None
       else {
         SnapshotTable.partitionColumn(spark, table) match {
           case Some(c) if schema.fieldNames.contains(c) =>
@@ -1592,41 +1266,20 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
         s"generation $gen of $table carries merge-on-read tombstones; a " +
           "file-level batch scan would return deleted rows - read it via " +
           "SnapshotTable.readMor, or materialize the generation first")
-    // Two-level file skipping: zone-map bounds first, then the
-    // file-level BLOOM sidecars for equality/IN probes on indexed
-    // columns — the axis zone maps cannot prune when every file spans
-    // the column's domain. Both are best-effort (absent index or
-    // unindexed file admits conservatively) and every filter is also
-    // a residual, so correctness never rests on either index. An
-    // unsatisfiable probe conjunction (empty intersection) plans zero
-    // files outright.
-    val longAdmitted = mergedProbes.foldLeft(
-        SnapshotTable.admittedFiles(spark, table, gen, mergedBounds)) {
-      case (files, (c, vs)) =>
-        if (vs.isEmpty) Seq.empty
-        else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-          SnapshotTable.bloomAdmittedFiles(spark, table, c, vs, files)
-        else files
-    }
-    // STRING point probes ride the same sidecars (the build hashes
-    // k.cast("string"), identity on string columns) — membership-only:
-    // strings never range-prune, so their only admission test is here.
-    val strAdmitted = mergedStrProbes.foldLeft(longAdmitted) {
-      case (files, (c, vs)) =>
-        if (vs.isEmpty) Seq.empty
-        else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-          SnapshotTable.bloomAdmittedFilesRendered(spark, table, c, vs, files)
-        else files
-    }
+    // File admission over the compile-time and runtime conjunction
+    // (zone maps, then bloom sidecars). Both indexes are best-effort
+    // and every filter is also a residual, so correctness never rests
+    // on either; an unsatisfiable probe conjunction plans zero files.
+    val rt = runtime
+    val filtered = pushed.and(rt).admittedFiles(spark, table, gen)
     // PUSHED-TOPN file exclusion (mutually exclusive with a pushed
     // bare limit — Spark offers one or the other): drop files whose
     // every row provably sorts after the n-th. Same runtime-filter
     // guard as the limit truncation below.
     val topAdmitted = topN match {
-      case Some((c, desc, n)) if rtBounds.isEmpty && rtProbes.isEmpty &&
-          rtStrProbes.isEmpty =>
-        SnapshotTable.topNAdmitted(spark, table, gen, c, desc, n, strAdmitted)
-      case _ => strAdmitted
+      case Some((c, desc, n)) if rt.isEmpty =>
+        SnapshotTable.topNAdmitted(spark, table, gen, c, desc, n, filtered)
+      case _ => filtered
     }
     // PUSHED-LIMIT truncation: plan only enough files (by recorded row
     // counts) to cover the limit. Sound because the pushdown is
@@ -1638,8 +1291,7 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
     // somehow appear, planning everything is the safe direction) or
     // any admitted file lacks a recorded count.
     val admitted = limit match {
-      case Some(n) if rtBounds.isEmpty && rtProbes.isEmpty &&
-          rtStrProbes.isEmpty && topAdmitted.nonEmpty =>
+      case Some(n) if rt.isEmpty && topAdmitted.nonEmpty =>
         val rec = SnapshotTable.recordedFileStats(spark, table, gen)
         val counts = topAdmitted.map(f => rec.get(f).flatMap(_._1))
         if (counts.forall(_.isDefined)) {
@@ -1653,8 +1305,7 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
       case _ => topAdmitted
     }
     if (record)
-      SnapshotSource.recordPlan(table, admitted.size,
-        rtBounds.nonEmpty || rtProbes.nonEmpty || rtStrProbes.nonEmpty)
+      SnapshotSource.recordPlan(table, admitted.size, rt.nonEmpty)
     (gen, admitted, false)
   }
 
@@ -1672,12 +1323,12 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
       resolvePlan()._2.map(SnapshotFilePartition(_)).toArray
   }
 
-  // The factory carries the MERGED (compile-time + runtime) bounds and
-  // probes so the task-side readers can extend the same pruning one
-  // level deeper: row groups inside admitted files.
+  // The factory carries the MERGED (compile-time + runtime) conjunction
+  // so the task-side readers can extend the same pruning one level
+  // deeper: row groups inside admitted files.
   override def createReaderFactory(): PartitionReaderFactory =
     new SnapshotReaderFactory(schema, SnapshotSource.sessionConf(),
-      mergedBounds, mergedProbes, aliases)
+      pushed.and(runtime), aliases)
 }
 
 /** Offset state. `pos == 0`: the consumer holds the full content of
@@ -2167,8 +1818,7 @@ private[streaming] class SnapshotConcatReader[T](paths: Seq[String],
 
 private[streaming] class SnapshotReaderFactory(schema: StructType,
     conf: SerializableConfiguration,
-    bounds: Map[String, (Long, Long)] = Map.empty,
-    probes: Map[String, Seq[Long]] = Map.empty,
+    pushed: PushedPredicates = PushedPredicates.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
 
@@ -2183,7 +1833,7 @@ private[streaming] class SnapshotReaderFactory(schema: StructType,
 
   // VECTORIZED decode ([[SnapshotColumnarReader]]): projected row-group
   // reads skip unrequested columns' PAGES, values land in columnar
-  // batches, and the scan's pushed bounds/probes skip whole ROW GROUPS
+  // batches, and the scan's pushed predicates skip whole ROW GROUPS
   // off the footer statistics before any page I/O. The row decoder
   // stays as the fallback for types outside the flat fast path (array
   // columns); `-Dgraft.snapshot.rowDecode=true` forces it for A/B
@@ -2197,11 +1847,11 @@ private[streaming] class SnapshotReaderFactory(schema: StructType,
     partition match {
       case SnapshotFilePartition(path) =>
         new SnapshotColumnarReader(path, schema, conf.value,
-          bounds = bounds, probes = probes, aliases = aliases)
+          pushed = pushed, aliases = aliases)
       case SnapshotKeyedPartition(paths, _, _) =>
         new SnapshotConcatReader(paths,
           p => new SnapshotColumnarReader(p, schema, conf.value,
-            bounds = bounds, probes = probes, aliases = aliases))
+            pushed = pushed, aliases = aliases))
     }
 }
 
@@ -2380,19 +2030,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
     info.command()
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownFilters {
-      private var required: StructType = tableSchema
-      private var pushed: Array[Filter] = Array.empty
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        pushed = filters.filter(f => SnapshotSource.boundOf(f,
-          c => tableSchema.fields.find(_.name == c).map(_.dataType)).isDefined ||
-          SnapshotSource.strProbesOf(Array(f)).nonEmpty)
-        filters
-      }
-      override def pushedFilters(): Array[Filter] = pushed
+    new SnapshotScanBuilder(tableSchema) {
       // RUNTIME group filtering (the MATCHED-only MERGE / keyed UPDATE
       // fast path): Spark's RowLevelOperationRuntimeGroupFiltering
       // plans the command's matching rows as a dynamic subquery and
@@ -2409,10 +2047,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
       override def build(): Scan = new Scan
           with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
         private val batch =
-          new SnapshotBatch(table, required, None,
-              SnapshotSource.boundsOf(pushed, tableSchema),
-              SnapshotSource.probesOf(pushed),
-              SnapshotSource.strProbesOf(pushed),
+          new SnapshotBatch(table, required, None, pushed,
               SnapshotSource.aliasMapOf(tableSchema)) {
             override def planInputPartitions(): Array[InputPartition] = {
               val (gen, files, segmented) = resolvePlan()
@@ -2442,10 +2077,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
         override def filter(
             predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
             : Unit =
-          batch.applyRuntimeFilters(
-            SnapshotSource.v2BoundsOf(predicates, tableSchema),
-            SnapshotSource.v2ProbesOf(predicates),
-            SnapshotSource.v2StrProbesOf(predicates))
+          batch.applyRuntimeFilters(predicates)
         override def toBatch: Batch = batch
       }
     }

@@ -731,4 +731,25 @@ class SnapshotTableSpec extends AnyFunSuite {
       assert(got.contains(cands.last), "unstatted candidates never drop")
     }
   }
+
+  test("mergedFooterSchema's per-file schema memo stays at its LRU cap") {
+    val dir = graft.Scratch.dir("schema_memo_cap")
+    spark.range(1).write.parquet(s"$dir/src")
+    val file = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
+      SnapshotTable.freshFiles(spark, s"$dir/src").head).toUri.getPath)
+    // Hard links: more distinct paths than the cap, one footer.
+    val links = (0 to SnapshotTable.FileSchemaCacheMax).map { i =>
+      java.nio.file.Files.createLink(
+        java.nio.file.Paths.get(dir, s"link-$i.parquet"), file).toString
+    }
+    // Four concurrent resolutions over disjoint quarters: the memo
+    // stays exact under contention, and the footer reads overlap.
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val schemas = scala.concurrent.Await.result(
+      scala.concurrent.Future.traverse(links.grouped(links.size / 4 + 1).toSeq)(
+        g => scala.concurrent.Future(SnapshotTable.mergedFooterSchema(spark, g))),
+      scala.concurrent.duration.Duration.Inf)
+    assert(schemas.forall(_.fieldNames.toSeq == Seq("id")))
+    assert(SnapshotTable.fileSchemaCacheSize === SnapshotTable.FileSchemaCacheMax)
+  }
 }
