@@ -908,10 +908,21 @@ object SnapshotTable {
     * caller receives the flag and owns the semantics.
     */
   def tailEntries(spark: SparkSession, table: String,
-      gen: Long): (Seq[String], Seq[String], Boolean) = {
+      gen: Long): (Seq[String], Seq[String], Boolean) =
+    tailEntriesWithBytes(spark, table, gen)._1
+
+  /** [[tailEntries]] plus the recorded byte length of every data row
+    * that has one (legacy rows are absent), off the SAME manifest read
+    * — what a planner handing files to the reader needs, at no extra
+    * metadata I/O.
+    */
+  def tailEntriesWithBytes(spark: SparkSession, table: String, gen: Long)
+      : ((Seq[String], Seq[String], Boolean), Map[String, Long]) = {
     val rows = readManifestRows(spark, manifestPath(table, gen))
     val (d, t) = splitEntries(rows)
-    (d, t, rows.exists(_.kind.contains(ParentKind)))
+    ((d, t, rows.exists(_.kind.contains(ParentKind))),
+      rows.collect { case r if r.kind.forall(_ == "data") && r.bytes.isDefined =>
+        r.path -> r.bytes.get }.toMap)
   }
 
   /** Guard for generation-per-epoch streaming sinks: epoch-derived
@@ -1664,9 +1675,6 @@ object SnapshotTable {
           java.nio.charset.StandardCharsets.UTF_8)) % BloomBits
     }
 
-  private def bloomPositions(v: Long): Seq[Long] =
-    bloomPositionsRendered(v.toString)
-
   /** Build (or rebuild) the file-level bloom index of `column` over
     * `files`: one distributed scan + a (file, word)-keyed `bit_or`
     * aggregation (map-side partial combine), landing as the sidecar
@@ -1988,19 +1996,24 @@ object SnapshotTable {
   def mergedFooterSchema(spark: SparkSession,
       files: Seq[String]): org.apache.spark.sql.types.StructType = {
     require(files.nonEmpty, "mergedFooterSchema needs at least one file")
-    files.iterator
-      .map { f =>
-        // The footer read runs outside the lock, so concurrent
-        // resolutions never serialize on I/O.
-        fileSchemaCache.synchronized(Option(fileSchemaCache.get(f)))
-          .getOrElse {
-            val schema = spark.read.parquet(f).schema
-            fileSchemaCache.synchronized(fileSchemaCache.put(f, schema))
-            schema
-          }
-      }
+    files.iterator.map(footerSchema(spark, _))
       .reduceLeft(org.apache.spark.sql.GraftBridge.mergeSchemas)
   }
+
+  /** One data file's footer schema through [[fileSchemaCache]] — a
+    * memo hit for every file the table's schema resolution already
+    * folded.
+    */
+  private[graft] def footerSchema(spark: SparkSession,
+      file: String): org.apache.spark.sql.types.StructType =
+    // The footer read runs outside the lock, so concurrent resolutions
+    // never serialize on I/O.
+    fileSchemaCache.synchronized(Option(fileSchemaCache.get(file)))
+      .getOrElse {
+        val schema = spark.read.parquet(file).schema
+        fileSchemaCache.synchronized(fileSchemaCache.put(file, schema))
+        schema
+      }
 
   /** All committed generation numbers of `table`, ascending (one
     * manifest directory each).

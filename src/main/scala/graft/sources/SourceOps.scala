@@ -652,14 +652,13 @@ object SourceOps {
   /** Snapshot generations read THROUGH the DataSource V2 connector
     * ([[graft.streaming.SnapshotSourceProvider]] with `BATCH_READ` and
     * the `generation` time-travel option) — this puts the connector's
-    * OWN parquet decode (the public Group API readers the streaming
-    * source also uses) inside the value-oracle gate: per generation
-    * the aggregate exercises every primitive path the readers decode —
+    * parquet read (the reader factory the streaming source also uses)
+    * inside the value-oracle gate: per generation the aggregate
+    * exercises every primitive type the reader decodes —
     * BIGINT (`key_sum`), UTF8 strings (`status_chars`), doubles
     * (`price_micro`, floor-micros canonical form), and INT64-micros
     * timestamps (`ts_min`) — against DuckDB reading the original
-    * parquet. A decode bug in any branch of the reader's type dispatch
-    * breaks the hash.
+    * parquet. A decode bug for any of those types breaks the hash.
     */
   def connectorRead(spark: SparkSession, dir: String): DataFrame = {
     val table = sharedThreeGens(spark, dir)
@@ -720,7 +719,7 @@ object SourceOps {
     * and `wide` is `DECIMAL(38,6)` (FIXED_LEN_BYTE_ARRAY — the
     * big-decimal form aggregates widen into). Two appends land odd
     * then even keys, and each generation reads back through the
-    * connector's vectorized decode with integral scale-shifted sums —
+    * connector's reader with integral scale-shifted sums —
     * exact decimal math end to end, no floating rounding anywhere; a
     * decode bug in either physical branch (or a lost unscaled byte)
     * breaks the hash. `wide` derives from the scale-4 decimal, never
@@ -755,7 +754,7 @@ object SourceOps {
   /** ARRAY columns through the connector — what lets EMBEDDING tables
     * live in the snapshot catalog: the full embeddings table commits
     * through the connector's write path (the three-level parquet list
-    * encode) and reads back through its row decoder, and the
+    * encode) and reads back through the connector's reader, and the
     * per-element quantized checksum (`floor(x * 1000)` over every
     * float, summed) must match DuckDB reading the ORIGINAL parquet —
     * an element lost, reordered, or misdecoded anywhere in the
@@ -787,12 +786,14 @@ object SourceOps {
     * miniature) publishes behind a path-only manifest, so FILE pruning
     * cannot help and a pushed range probe's cost rests entirely on the
     * reader skipping row groups off the footer statistics. The content
-    * is the exact value gate; the `ok` boolean reproduces THE skip
-    * decision ([[graft.streaming.SnapshotColumnarReader.groupAdmits]],
-    * the same function the reader's advance loop calls) over the real
-    * footer driver-side and requires a strict-subset admission —
-    * group boundaries are compression-dependent, so the raw counts
-    * bind as the boolean, not as oracle columns.
+    * is the exact value gate; the `ok` boolean reproduces the skip
+    * decision driver-side — parquet's own `RowGroupFilter` over the
+    * real footer, with the predicate the connector pushes
+    * ([[graft.streaming.PushedPredicates.parquetFilters]] through
+    * Spark's `ParquetFilters` under the session's pushdown flags) —
+    * and requires a strict-subset admission; group boundaries are
+    * compression-dependent, so the raw counts bind as the boolean, not
+    * as oracle columns.
     */
   def connectorRowGroup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -812,12 +813,27 @@ object SourceOps {
         new org.apache.hadoop.fs.Path(file), conf))
     val (total, admitted) =
       try {
-        import scala.jdk.CollectionConverters._
-        val blocks = r.getFooter.getBlocks.asScala
-        (blocks.size.toLong, blocks.count(b =>
-          graft.streaming.SnapshotColumnarReader.groupAdmits(
-            graft.streaming.PushedPredicates(
-              bounds = Map("o_orderkey" -> ((lo, hi)))), b)).toLong)
+        val blocks = r.getFooter.getBlocks
+        val fileSchema = r.getFooter.getFileMetaData.getSchema
+        val sql = spark.sessionState.conf
+        val translate = new org.apache.spark.sql.execution.datasources.parquet.ParquetFilters(
+          fileSchema, sql.parquetFilterPushDownDate,
+          sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
+          sql.parquetFilterPushDownStringPredicate,
+          sql.parquetFilterPushDownInFilterThreshold, sql.caseSensitiveAnalysis,
+          org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec(
+            org.apache.spark.sql.internal.LegacyBehaviorPolicy.CORRECTED))
+        val pushed = graft.streaming.PushedPredicates(
+          bounds = Map("o_orderkey" -> ((lo, hi))))
+          .parquetFilters(spark.read.parquet(file).schema)
+          .flatMap(translate.createFilter)
+          .reduceOption(org.apache.parquet.filter2.predicate.FilterApi.and)
+        val kept = pushed.fold(blocks)(p =>
+          org.apache.parquet.filter2.compat.RowGroupFilter.filterRowGroups(
+            java.util.List.of(org.apache.parquet.filter2.compat.RowGroupFilter
+              .FilterLevel.STATISTICS),
+            org.apache.parquet.filter2.compat.FilterCompat.get(p), blocks, r))
+        (blocks.size.toLong, kept.size.toLong)
       } finally r.close()
     require(total >= 4,
       s"row-group fixture must span several groups; got $total " +
@@ -2234,7 +2250,7 @@ object SourceOps {
     * snapshot reads back two ways that must agree exactly: the native
     * [[SnapshotTable.readAsMerged]] union (old files serve NULL for
     * the new column) and the DSv2 connector, whose inferred schema
-    * merges the latest manifest's footers and whose row decoder
+    * merges the latest manifest's footers and whose reader
     * resolves fields BY NAME so missing columns degrade to nulls
     * instead of misaligned values. Gen 1 time-travels with its
     * original narrow schema. Counts of rows carrying the new column,

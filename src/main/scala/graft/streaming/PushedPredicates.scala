@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.expressions.{Expression, Literal}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, In, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,9 +15,9 @@ import graft.sources.SnapshotTable
   * filters and the SQL DELETE pushdown all translate into:
   *
   *  - `bounds`: per-column `[lo, hi]` in the column's PHYSICAL long
-  *    domain (manifest zone maps, row-group footer statistics);
+  *    domain (manifest zone maps; row groups via [[parquetFilters]]);
   *  - `probes`: exact integer point sets for the bloom sidecars and
-  *    row-group statistics;
+  *    row groups;
   *  - `strProbes`: exact string point sets for the bloom sidecars.
   *
   * Every form only ever SKIPS files or row groups a conjunct proves
@@ -47,6 +49,50 @@ private[graft] case class PushedPredicates(
       merge(bounds, o.bounds)((x, y) => (x._1 max y._1, x._2 min y._2)),
       merge(probes, o.probes)(_ intersect _),
       merge(strProbes, o.strProbes)(_ intersect _))
+  }
+
+  /** This conjunction as the filters Spark's parquet reader turns into
+    * row-group (and page) predicates — THE translation to parquet, so
+    * row groups prune on exactly what files prune on: bound sides as
+    * `>=` / `<=`, point sets as `IN`, values in the external form of
+    * the column's type in `schema`, named as the file being read
+    * stores the column (`renamed`: a pre-RENAME file's old name). A
+    * bound side at the domain's edge, or a value the type cannot
+    * carry, drops its filter: that only admits more row groups.
+    */
+  def parquetFilters(schema: StructType,
+      renamed: Map[String, String] = Map.empty): Array[Filter] = {
+    val typeOf = schema.fields.iterator.map(f => f.name -> f.dataType).toMap
+    def external(dt: DataType, v: Long): Option[Any] = dt match {
+      case IntegerType if v.isValidInt => Some(v.toInt)
+      case DateType if v.isValidInt => Some(java.time.LocalDate.ofEpochDay(v))
+      case LongType => Some(v)
+      case TimestampType => Some(DateTimeUtils.microsToInstant(v))
+      case TimestampNTZType => Some(DateTimeUtils.microsToLocalDateTime(v))
+      case d: DecimalType => Some(java.math.BigDecimal.valueOf(v, d.scale))
+      case _ => None
+    }
+    def name(c: String) = renamed.getOrElse(c, c)
+    val ranges = for {
+      (c, (lo, hi)) <- bounds.toSeq
+      dt <- typeOf.get(c).toSeq
+      f <- Seq(
+        Option.when(lo != Long.MinValue)(lo).flatMap(external(dt, _))
+          .map(GreaterThanOrEqual(name(c), _)),
+        Option.when(hi != Long.MaxValue)(hi).flatMap(external(dt, _))
+          .map(LessThanOrEqual(name(c), _))).flatten
+    } yield f
+    val points = for {
+      (c, vs) <- probes.toSeq
+      dt <- typeOf.get(c).toSeq
+      xs = vs.flatMap(external(dt, _))
+      if xs.nonEmpty && xs.size == vs.size
+    } yield In(name(c), xs.toArray)
+    val strings = strProbes.toSeq.collect {
+      case (c, vs) if vs.nonEmpty && typeOf.contains(c) =>
+        In(name(c), vs.toArray[Any])
+    }
+    (ranges ++ points ++ strings).toArray
   }
 
   /** Generation `gen`'s files of `table` this conjunction admits —

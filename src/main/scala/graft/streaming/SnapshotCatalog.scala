@@ -608,9 +608,9 @@ private[streaming] class SnapshotBranchTable(table: String, branch: String)
           s"SnapshotBranch($table@$branch)"
         override def toBatch: Batch = new Batch {
           override def planInputPartitions(): Array[InputPartition] =
-            files().map(SnapshotFilePartition(_)).toArray
+            files().map(f => SnapshotFilePartition(SnapshotFile(f))).toArray
           override def createReaderFactory(): PartitionReaderFactory =
-            new SnapshotReaderFactory(required, SnapshotSource.sessionConf())
+            new SnapshotReaderFactory(required)
         }
       }
     }

@@ -6,8 +6,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -20,7 +18,6 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.SnapshotTable
@@ -56,11 +53,11 @@ import graft.sources.SnapshotTable
   * window is the unexpired history — the standard
   * retention-vs-replay trade every lakehouse source documents.
   *
-  * The per-file readers decode parquet through the library's public
-  * example Group API (no Spark internals): primitive columns map by
-  * NAME from the file footer's schema to the scan schema, so a file
-  * written before a column was added simply yields nulls for it —
-  * the mergeSchema posture at the row level.
+  * Files decode through Spark's own parquet reader
+  * ([[SnapshotReaderFactory]]): columns map by NAME from the file
+  * footer's schema to the scan schema, so a file written before a
+  * column was added simply yields nulls for it — the mergeSchema
+  * posture at the row level.
   */
 class SnapshotSourceProvider extends TableProvider {
 
@@ -289,22 +286,8 @@ private[graft] object SnapshotSource {
     }
   }
 
-  /** Parquet INT96 timestamp (the type Spark's own writer emits by
-    * default) as epoch MICROS: 8 little-endian bytes of
-    * nanos-of-day + 4 little-endian bytes of Julian day. Modern
-    * timestamps only (no pre-Gregorian rebase — the 1582 calendar
-    * switch is out of every fixture's range and documented as such).
-    */
-  def int96ToMicros(b: Array[Byte]): Long = {
-    require(b.length == 12, s"INT96 timestamp must be 12 bytes; got ${b.length}")
-    val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-  }
-
   /** The session's Hadoop configuration, captured DRIVER-SIDE in a
-    * serializable wrapper for the task-side readers/writers — a bare
+    * serializable wrapper for the task-side writers — a bare
     * `new Configuration()` would drop every `spark.hadoop.*` setting
     * (filesystem credentials, scheme registrations) the rest of the
     * snapshot layer honors.
@@ -323,6 +306,26 @@ private[graft] object SnapshotSource {
       case r: org.apache.spark.sql.connector.expressions.NamedReference
           if r.fieldNames.length == 1 => Some(r.fieldNames.head)
       case _ => None
+    }
+
+  /** `paths` as the reader opens them: recorded byte lengths, and on
+    * a renamed lineage each file's pre-RENAME footer names, read off
+    * the footer-schema memo the table's schema resolution filled.
+    */
+  private[streaming] def snapshotFiles(paths: Seq[String],
+      bytes: collection.Map[String, Long],
+      aliases: Map[String, Seq[String]]): Seq[SnapshotFile] =
+    paths.map { p =>
+      val renamed =
+        if (aliases.isEmpty) Map.empty[String, String]
+        else {
+          val names =
+            SnapshotTable.footerSchema(SparkSession.active, p).fieldNames.toSet
+          aliases.flatMap { case (c, priors) =>
+            if (names.contains(c)) None else priors.find(names).map(c -> _)
+          }
+        }
+      SnapshotFile(p, bytes.getOrElse(p, -1L), renamed)
     }
 
   /** Full-content commits (INSERT OVERWRITE, CTAS) reduce their staged
@@ -673,8 +676,8 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
 
   /** The WRITE path: `df.write.format(...).mode("append").save()` /
     * SQL `INSERT INTO` stages one parquet file per task under a
-    * writer-unique attempt directory (encoded through the same public
-    * Group API the readers decode with), and the driver-side commit
+    * writer-unique attempt directory (encoded through the public
+    * parquet Group API), and the driver-side commit
     * publishes them as the NEXT generation carrying the previous one's
     * files verbatim — the same append-without-rewrite,
     * first-writer-wins, manifest-as-commit-point protocol every other
@@ -775,12 +778,12 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
       "startingGeneration and startingTimestamp are mutually exclusive")
     require(startingGeneration.forall(_ >= 1L),
       "startingGeneration must be >= 1")
-    // Column pruning reaches the decoders: readers convert only the
-    // pruned schema's fields, and the columnar reader never fetches an
-    // unrequested column's pages. Predicate pushdown is V2 only
+    // Column pruning reaches the reader: the pruned schema is the
+    // requested schema of Spark's parquet reader, which never fetches
+    // an unrequested column's pages. Predicate pushdown is V2 only
     // ([[SnapshotScanBuilder]]): the pushed conjuncts translate once
     // into [[PushedPredicates]], batch planning admits files through
-    // the manifest zone maps and bloom sidecars, and the readers skip
+    // the manifest zone maps and bloom sidecars, and the reader skips
     // row groups off footer statistics. Every predicate is ALSO a
     // residual, so correctness never rests on the stats.
     new SnapshotScanBuilder(tableSchema)
@@ -1036,15 +1039,12 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
             private lazy val est: (java.util.OptionalLong, java.util.OptionalLong) =
               try {
                 val spark = SparkSession.active
-                val (gen, files, segmented) = batch.resolvePlan(record = false)
                 // Segmented chains fold each segment's recorded rows
                 // during the SAME walk that resolved the file set, so
                 // the O(batch)-commit layout keeps O(1)-per-file-free
                 // planning too (the r18 gap: they used to fall through
-                // to one driver getFileStatus per planned file). ONE
-                // resolution policy, shared with the count pushdown.
-                val recorded =
-                  SnapshotTable.statsFor(spark, table, gen, segmented)
+                // to one driver getFileStatus per planned file).
+                val (_, files, _, recorded) = batch.resolvePlan(record = false)
                 val sizes = files.map(f => recorded.get(f).flatMap(_._2))
                 if (sizes.forall(_.isDefined)) {
                   SnapshotSource.recordStatsSource(table, fromManifest = true)
@@ -1115,8 +1115,8 @@ private[streaming] abstract class SnapshotScanBuilder(tableSchema: StructType)
 /** Batch scan AS OF a generation (latest by default): the planned
   * partitions are exactly the manifest's files — the same snapshot
   * isolation [[SnapshotTable.readAs]] provides, but through the
-  * connector's own readers, which puts the custom parquet decode path
-  * inside the value-oracle gate (`src_connector_read`).
+  * connector's own planning and reader factory, which puts both inside
+  * the value-oracle gate (`src_connector_read`).
   */
 private[streaming] class SnapshotBatch(table: String, schema: StructType,
     generation: Option[Long],
@@ -1169,7 +1169,7 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
                 case _ => None
               }
             intWidth.flatMap { isInt =>
-              val (gen, files, seg) = resolvePlan(record = false)
+              val (gen, files, seg, _) = resolvePlan(record = false)
               if (seg || files.isEmpty) None
               else {
                 val vals = SnapshotTable.partitionValues(spark, table, gen, c)
@@ -1215,20 +1215,21 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
         schema.fieldNames.contains(c))
     } catch { case _: Exception => Seq.empty }
 
+  /** `(resolved generation, planned file list, segmented, recorded
+    * (n_rows, bytes) per file)` — the stats serve the LIMIT
+    * truncation, the size estimate and the reader's file lengths.
+    */
+  type Plan = (Long, Seq[String], Boolean, Map[String, (Option[Long], Option[Long])])
+
   /** The planning core, shared with [[planInputPartitions]] and the
-    * row-level operations' RECORDING scan: `(resolved generation,
-    * planned file list, segmented)`. Split out so a caller that must
-    * know EXACTLY which snapshot and files the scan served (the
+    * row-level operations' RECORDING scan. Split out so a caller that
+    * must know EXACTLY which snapshot and files the scan served (the
     * UPDATE/MERGE subset-rewrite commit) reads the same resolution the
     * partitions came from, never a re-resolution that a concurrent
     * commit could have moved.
     */
-  def resolvePlan(): (Long, Seq[String], Boolean) = resolvePlan(record = true)
+  def resolvePlan(): Plan = resolvePlan(record = true)
 
-  /** `record = false` for ADVISORY callers (statistics estimation):
-    * their resolutions are not executions and must not pollute the
-    * planning telemetry the pruning gates read.
-    */
   /** The snapshot this Scan serves, resolved ONCE per Scan: the SPJ
     * path resolves at outputPartitioning time (the group map) and
     * again at planInputPartitions (runtime filters applied) — a
@@ -1246,7 +1247,31 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
     gen
   }
 
-  def resolvePlan(record: Boolean): (Long, Seq[String], Boolean) = {
+  /** `record = false` for ADVISORY callers (statistics estimation):
+    * their resolutions are not executions and must not pollute the
+    * planning telemetry the pruning gates read.
+    */
+  def resolvePlan(record: Boolean): Plan = {
+    val rt = runtime
+    val plan = resolved.collect { case (r, p) if r == rt => p }.getOrElse {
+      val p = resolve(rt)
+      resolved = Some((rt, p))
+      p
+    }
+    if (record && !plan._3)
+      SnapshotSource.recordPlan(table, plan._2.size, rt.nonEmpty)
+    plan
+  }
+
+  /** The last resolution and the runtime filters it ran under: the size
+    * estimate (at optimization) and the partition planning (at
+    * execution) of one scan resolve the same pinned snapshot, so the
+    * second reuses the first's manifest reads unless a runtime filter
+    * landed in between.
+    */
+  @volatile private var resolved: Option[(PushedPredicates, Plan)] = None
+
+  private def resolve(rt: PushedPredicates): Plan = {
     val spark = SparkSession.active
     val gen = pinnedGen
     // A SEGMENTED generation serves its chain-resolved file set:
@@ -1254,14 +1279,16 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
     // segments, and zone-map pruning is best-effort by contract
     // (segments record no stats; the residual row filters keep
     // correctness exactly as with an unrecorded column).
-    val (_, _, segmented) = SnapshotTable.tailEntries(spark, table, gen)
-    if (segmented)
-      return (gen, SnapshotTable.resolvedFiles(spark, table, gen), true)
+    val (_, dels, segmented) = SnapshotTable.tailEntries(spark, table, gen)
+    // The recorded-stats policy the count pushdown shares (a segmented
+    // chain folds them during the walk that resolves its files).
+    val rec = SnapshotTable.statsFor(spark, table, gen, segmented)
+    if (segmented) return (gen, rec.keys.toSeq.sorted, true, rec)
     // A merge-on-read generation's visibility is data MINUS tombstone
     // keys; a file-level scan cannot apply that and serving the raw
     // data files would silently resurrect deleted rows — fail loudly
     // (the table-aware read is SnapshotTable.readMor).
-    if (SnapshotTable.listDeleteFiles(spark, table, gen).nonEmpty)
+    if (dels.nonEmpty)
       throw new IllegalStateException(
         s"generation $gen of $table carries merge-on-read tombstones; a " +
           "file-level batch scan would return deleted rows - read it via " +
@@ -1270,7 +1297,6 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
     // (zone maps, then bloom sidecars). Both indexes are best-effort
     // and every filter is also a residual, so correctness never rests
     // on either; an unsatisfiable probe conjunction plans zero files.
-    val rt = runtime
     val filtered = pushed.and(rt).admittedFiles(spark, table, gen)
     // PUSHED-TOPN file exclusion (mutually exclusive with a pushed
     // bare limit — Spark offers one or the other): drop files whose
@@ -1292,7 +1318,6 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
     // any admitted file lacks a recorded count.
     val admitted = limit match {
       case Some(n) if rt.isEmpty && topAdmitted.nonEmpty =>
-        val rec = SnapshotTable.recordedFileStats(spark, table, gen)
         val counts = topAdmitted.map(f => rec.get(f).flatMap(_._1))
         if (counts.forall(_.isDefined)) {
           val cum = counts.map(_.get).scanLeft(0L)(_ + _).tail
@@ -1304,31 +1329,39 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
         } else topAdmitted
       case _ => topAdmitted
     }
-    if (record)
-      SnapshotSource.recordPlan(table, admitted.size, rt.nonEmpty)
-    (gen, admitted, false)
+    (gen, admitted, false, rec)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = spjPlan match {
-    case Some((_, isInt, groups)) =>
-      // Key-grouped serving: one partition per identity value, every
-      // group kept (a runtime-filtered-empty group still ships, with
-      // zero files — reader yields nothing) so the reported
-      // KeyGroupedPartitioning's partition count stays exact.
-      val admitted = resolvePlan()._2.toSet
-      groups.map { case (v, fs) =>
-        SnapshotKeyedPartition(fs.filter(admitted), v, isInt): InputPartition
-      }.toArray
-    case None =>
-      resolvePlan()._2.map(SnapshotFilePartition(_)).toArray
+  /** `files` as the reader opens them. */
+  protected def opened(files: Seq[String],
+      rec: Map[String, (Option[Long], Option[Long])]): Seq[SnapshotFile] =
+    SnapshotSource.snapshotFiles(files,
+      rec.collect { case (f, (_, Some(b))) => f -> b }, aliases)
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val spj = spjPlan
+    val (_, files, _, rec) = resolvePlan()
+    spj match {
+      case Some((_, isInt, groups)) =>
+        // Key-grouped serving: one partition per identity value, every
+        // group kept (a runtime-filtered-empty group still ships, with
+        // zero files — reader yields nothing) so the reported
+        // KeyGroupedPartitioning's partition count stays exact.
+        val admitted = files.toSet
+        groups.map { case (v, fs) =>
+          SnapshotKeyedPartition(opened(fs.filter(admitted), rec), v, isInt)
+            : InputPartition
+        }.toArray
+      case None =>
+        opened(files, rec).map(SnapshotFilePartition(_)).toArray
+    }
   }
 
   // The factory carries the MERGED (compile-time + runtime) conjunction
-  // so the task-side readers can extend the same pruning one level
-  // deeper: row groups inside admitted files.
+  // so the reader extends the same pruning one level deeper: row
+  // groups inside admitted files.
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(schema, SnapshotSource.sessionConf(),
-      pushed.and(runtime), aliases)
+    new SnapshotReaderFactory(schema, pushed.and(runtime))
 }
 
 /** Offset state. `pos == 0`: the consumer holds the full content of
@@ -1468,46 +1501,40 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
     * O(files²/chunk) driver work at exactly the many-file scale the
     * chunking exists for.
     */
-  private val initEntries =
-    new java.util.concurrent.ConcurrentHashMap[Long, (Seq[String], Seq[String])]()
-  // A segmented load's recorded stats, captured DURING the same chain
-  // walk that resolved its file list — initBytesOf must never pay a
-  // second O(chain) manifest walk for the stats the first walk
-  // already carried.
-  private val initStats = new java.util.concurrent.ConcurrentHashMap[
-    Long, Map[String, (Option[Long], Option[Long])]]()
-  private def initEntriesOf(g: Long): (Seq[String], Seq[String]) =
+  private val initEntries = new java.util.concurrent.ConcurrentHashMap[
+    Long, (Seq[String], Seq[String], Map[String, Long])]()
+  /** `(data, tombstones, recorded bytes per data file)`; the bytes come
+    * off the SAME read that resolved the list (a segmented chain folds
+    * them during its walk), so neither the byte cap nor the reader's
+    * file lengths ever pay a second manifest read.
+    */
+  private def initEntriesOf(g: Long): (Seq[String], Seq[String], Map[String, Long]) =
     initEntries.computeIfAbsent(g, g => {
       // An initial load serves the generation's FULL content: a
       // segmented generation chain-resolves (sorted, immutable —
       // chunked replay stays byte-identical); resolution's own guards
       // refuse tombstoned segments.
-      val (d, t, seg) = SnapshotTable.tailEntries(spark, table, g)
+      val ((d, t, seg), bytes) = SnapshotTable.tailEntriesWithBytes(spark, table, g)
       if (seg) {
         val rows = SnapshotTable.resolvedDataRows(spark, table, g)
-        initStats.put(g, rows.map(r => r._1 -> ((r._2, r._3))).toMap)
-        (rows.map(_._1), t)
-      } else (d, t)
+        (rows.map(_._1), t, rows.collect { case (p, _, Some(b)) => p -> b }.toMap)
+      } else (d, t, bytes)
     })
 
   /** Per-file bytes of the initial-load generation, aligned with
     * [[initEntriesOf]]'s sorted list — from the manifest's RECORDED
-    * stats (a segmented chain's were folded during the resolution walk
-    * above; a full-carry generation pays ONE manifest read, and only
-    * when a byte cap is actually set), so byte-capped offset math
-    * costs no per-file I/O; only legacy pre-recording rows fall back
-    * to one `getFileStatus` each, computed once per stream instance.
+    * stats, so byte-capped offset math costs no per-file I/O; only
+    * legacy pre-recording rows fall back to one `getFileStatus` each,
+    * computed once per stream instance.
     */
   private val initBytes =
     new java.util.concurrent.ConcurrentHashMap[Long, Array[Long]]()
   private def initBytesOf(g: Long): Array[Long] =
     initBytes.computeIfAbsent(g, g => {
-      val files = initEntriesOf(g)._1
-      val rec = Option(initStats.get(g)).getOrElse(
-        SnapshotTable.recordedFileStats(spark, table, g))
+      val (files, _, rec) = initEntriesOf(g)
       val conf = spark.sparkContext.hadoopConfiguration
       files.map { f =>
-        rec.get(f).flatMap(_._2).getOrElse {
+        rec.getOrElse(f, {
           val p = new org.apache.hadoop.fs.Path(f)
           // A file expired mid-load surfaces the stream's OWN
           // diagnostic (the nextOffset guard's wording), not a raw
@@ -1519,7 +1546,7 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
                 "mid-load - retention outran the stream's replayable " +
                 s"window (missing data file: $f)")
           }
-        }
+        })
       }.toArray
     })
 
@@ -1604,8 +1631,18 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
     // span pays span+1 manifest reads, not ~4 per hop.
     val entries =
       scala.collection.mutable.Map.empty[Long, (Seq[String], Seq[String], Boolean)]
+    // Recorded lengths of every data file those reads listed, for the
+    // reader.
+    val bytes = scala.collection.mutable.Map.empty[String, Long]
     def of(g: Long): (Seq[String], Seq[String], Boolean) =
-      entries.getOrElseUpdate(g, SnapshotTable.tailEntries(spark, table, g))
+      entries.getOrElseUpdate(g, {
+        val (e, b) = SnapshotTable.tailEntriesWithBytes(spark, table, g)
+        bytes ++= b
+        e
+      })
+    def partitions(files: Seq[String]): Seq[InputPartition] =
+      SnapshotSource.snapshotFiles(files, bytes, aliases)
+        .map(SnapshotFilePartition(_))
     // A diff against a SEGMENTED parent needs the parent's resolved
     // content (its own manifest lists only its batch) — walked at most
     // once per batch and only when a full-carry commit follows
@@ -1639,7 +1676,8 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
       // Reuse the instance-cached parse (the list is immutable); seed
       // the per-call map so the first post-load hop's diff against m
       // doesn't re-read the manifest either.
-      val (data, dels) = initEntriesOf(m)
+      val (data, dels, loadBytes) = initEntriesOf(m)
+      bytes ++= loadBytes
       // Seed the per-call map with the RESOLVED content (seg = false):
       // the first post-load hop's diff against m must see the full
       // snapshot m served, whether m was full-carry or segmented.
@@ -1654,7 +1692,7 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
             "appends - re-run with .option(\"skipRewrites\", \"true\") to " +
             "ignore deletes")
       val hi = if (e.pos > 0L) e.pos else data.size.toLong
-      out ++= data.slice(s.pos.toInt, hi.toInt).map(SnapshotFilePartition(_))
+      out ++= partitions(data.slice(s.pos.toInt, hi.toInt))
       if (e.pos > 0L) return out.toArray
       from = m
     }
@@ -1709,7 +1747,7 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
             "tombstone file(s); row-level deletes are not expressible as " +
             "appends - re-run with .option(\"skipRewrites\", \"true\") to " +
             "ignore deletes")
-      if (removed.isEmpty) out ++= added.map(SnapshotFilePartition(_))
+      if (removed.isEmpty) out ++= partitions(added)
       else {
         // The opted-in skip is only sound for CONTENT-NEUTRAL rewrites,
         // and neutrality is decided by the commit's RECORDED ACTION,
@@ -1768,15 +1806,23 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(schema, SnapshotSource.sessionConf(),
-      aliases = aliases)
+    new SnapshotReaderFactory(schema)
 
   override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 }
 
-private[streaming] case class SnapshotFilePartition(path: String) extends InputPartition
+/** One data file as the reader opens it: its recorded byte length
+  * (`-1` on a legacy manifest row: the reader asks the filesystem) and
+  * the footer name it stores each RENAMED column under (current →
+  * pre-rename name; empty for files written after the rename).
+  */
+private[streaming] case class SnapshotFile(path: String, bytes: Long = -1L,
+    renamed: Map[String, String] = Map.empty)
+
+private[streaming] case class SnapshotFilePartition(file: SnapshotFile)
+    extends InputPartition
 
 /** One IDENTITY-PARTITION group as a single input partition — the
   * storage-partitioned-join unit: all of one partition value's files,
@@ -1785,7 +1831,7 @@ private[streaming] case class SnapshotFilePartition(path: String) extends InputP
   * shuffle. `isInt` mirrors the column's physical width (INT/DATE
   * vs BIGINT) so the key row's type matches the reported transform.
   */
-private[streaming] case class SnapshotKeyedPartition(paths: Seq[String],
+private[streaming] case class SnapshotKeyedPartition(files: Seq[SnapshotFile],
     value: Long, isInt: Boolean) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
@@ -1793,66 +1839,133 @@ private[streaming] case class SnapshotKeyedPartition(paths: Seq[String],
       if (isInt) value.toInt else value))
 }
 
-/** Sequential concatenation of per-file readers — the multi-file
-  * reader a keyed partition needs. */
-private[streaming] class SnapshotConcatReader[T](paths: Seq[String],
-    mk: String => PartitionReader[T]) extends PartitionReader[T] {
-  private var idx = 0
-  private var cur: PartitionReader[T] = _
-  override def next(): Boolean = {
-    while (true) {
-      if (cur == null) {
-        if (idx >= paths.size) return false
-        cur = mk(paths(idx))
-        idx += 1
-      }
-      if (cur.next()) return true
-      cur.close()
-      cur = null
-    }
-    false
-  }
-  override def get(): T = cur.get()
-  override def close(): Unit = if (cur != null) cur.close()
-}
-
+/** Decodes the admitted files with SPARK'S OWN parquet reader (the
+  * `ParquetPartitionReaderFactory` of Spark's V2 parquet scan:
+  * vectorized decode, nested types, INT96, row-group and page
+  * skipping), while every planning decision stays the connector's.
+  * The DECLARED `schema` is the requested schema, so it wins over
+  * what Spark would infer from a footer (TIMESTAMP_NTZ, INT96).
+  * `pushed` becomes the parquet filters
+  * ([[PushedPredicates.parquetFilters]]) that skip row groups inside
+  * admitted files; the row-level rewrite scan passes none. A
+  * pre-RENAME file is read with a per-file requested schema and
+  * filters naming its footer columns — the output is positional.
+  */
 private[streaming] class SnapshotReaderFactory(schema: StructType,
-    conf: SerializableConfiguration,
-    pushed: PushedPredicates = PushedPredicates.empty,
-    aliases: Map[String, Seq[String]] = Map.empty)
+    pushed: PushedPredicates = PushedPredicates.empty)
     extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case SnapshotFilePartition(path) =>
-        new SnapshotFileReader(path, schema, conf.value, aliases)
-      case SnapshotKeyedPartition(paths, _, _) =>
-        new SnapshotConcatReader(paths,
-          p => new SnapshotFileReader(p, schema, conf.value, aliases))
-    }
+  import org.apache.spark.sql.execution.datasources.PartitionedFile
+  import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 
-  // VECTORIZED decode ([[SnapshotColumnarReader]]): projected row-group
-  // reads skip unrequested columns' PAGES, values land in columnar
-  // batches, and the scan's pushed predicates skip whole ROW GROUPS
-  // off the footer statistics before any page I/O. The row decoder
-  // stays as the fallback for types outside the flat fast path (array
-  // columns); `-Dgraft.snapshot.rowDecode=true` forces it for A/B
-  // debugging.
+  // Captured driver-side and shipped with the factory.
+  private val hadoopConf = new SerializableConfiguration(
+    SnapshotReaderFactory.requesting(
+      SparkSession.active.sessionState.newHadoopConf(), schema))
+
+  // One delegate per distinct per-file renaming — a single one on an
+  // unrenamed lineage. Built where it is used: on an executor,
+  // `SQLConf.get` is the task's copy of the session's SQL settings (a
+  // shipped SQLConf would arrive without its settings).
+  @transient private lazy val delegates = new java.util.concurrent.ConcurrentHashMap[
+    Map[String, String], ParquetPartitionReaderFactory]()
+
+  private def delegate(renamed: Map[String, String]): ParquetPartitionReaderFactory =
+    delegates.computeIfAbsent(renamed, _ => {
+      val requested = StructType(schema.fields.map(f =>
+        renamed.get(f.name).fold(f)(n => f.copy(name = n))))
+      val conf =
+        if (requested == schema) hadoopConf
+        else new SerializableConfiguration(SnapshotReaderFactory.requesting(
+          new Configuration(hadoopConf.value), requested))
+      val sqlConf = org.apache.spark.sql.internal.SQLConf.get
+      ParquetPartitionReaderFactory(sqlConf,
+        new SnapshotReaderFactory.Shipped(conf), requested, requested, new StructType(),
+        pushed.parquetFilters(schema, renamed), None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetOptions(
+          Map.empty[String, String], sqlConf))
+    })
+
+  private def read[T](partition: InputPartition,
+      build: (ParquetPartitionReaderFactory, PartitionedFile) => PartitionReader[T])
+      : PartitionReader[T] = {
+    val files = partition match {
+      case SnapshotFilePartition(f) => Seq(f)
+      case SnapshotKeyedPartition(fs, _, _) => fs
+    }
+    val opened = files.map { f =>
+      val len =
+        if (f.bytes >= 0L) f.bytes
+        else {
+          val p = new org.apache.hadoop.fs.Path(f.path)
+          p.getFileSystem(hadoopConf.value).getFileStatus(p).getLen
+        }
+      PartitionedFile(InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPathString(f.path),
+        0L, len, Array.empty[String], 0L, len) -> f.renamed
+    }
+    val renamedOf = opened.map { case (pf, r) => pf.filePath -> r }.toMap
+    new org.apache.spark.sql.execution.datasources.v2.FilePartitionReader[T](
+      opened.iterator.map(_._1), pf => build(delegate(renamedOf(pf.filePath)), pf),
+      new org.apache.spark.sql.catalyst.FileSourceOptions(
+        Map.empty[String, String]))
+  }
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    read(partition, _.buildReader(_))
+
+  // Spark's own decision (vectorized reader enabled, whole-stage
+  // codegen on, every type batch-readable, field count in bounds);
+  // renames change names only, so one delegate answers for all files.
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    !java.lang.Boolean.getBoolean("graft.snapshot.rowDecode") &&
-      SnapshotColumnarReader.supports(schema)
+    delegate(Map.empty).supportColumnarReads(partition)
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[ColumnarBatch] =
-    partition match {
-      case SnapshotFilePartition(path) =>
-        new SnapshotColumnarReader(path, schema, conf.value,
-          pushed = pushed, aliases = aliases)
-      case SnapshotKeyedPartition(paths, _, _) =>
-        new SnapshotConcatReader(paths,
-          p => new SnapshotColumnarReader(p, schema, conf.value,
-            pushed = pushed, aliases = aliases))
-    }
+    read(partition, _.buildColumnarReader(_))
+}
+
+private[streaming] object SnapshotReaderFactory {
+
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** Sets on `c` what Spark's parquet scan sets before reading: the
+    * read support, the REQUESTED schema (which the reader takes from
+    * the configuration, not from the factory), and the SQL flags the
+    * parquet-to-Spark schema conversion consults.
+    */
+  private def requesting(c: Configuration, requested: StructType): Configuration = {
+    val sqlConf = SQLConf.get
+    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    c.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, requested.json)
+    c.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    c.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sqlConf.nestedSchemaPruningEnabled)
+    c.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    c.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sqlConf.isParquetBinaryAsString)
+    c.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sqlConf.isParquetINT96AsTimestamp)
+    c.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sqlConf.legacyParquetNanosAsLong)
+    c
+  }
+
+  /** The parquet factory takes its configuration as a `Broadcast`; this
+    * one wraps the configuration the factory already ships instead of
+    * registering a block per scan.
+    */
+  private class Shipped[T: scala.reflect.ClassTag](v: T)
+      extends org.apache.spark.broadcast.Broadcast[T](-1L) {
+    override protected def getValue(): T = v
+    override protected def doUnpersist(blocking: Boolean): Unit = ()
+    override protected def doDestroy(blocking: Boolean): Unit = ()
+  }
 }
 
 private[streaming] case class SnapshotWriteMessage(path: String)
@@ -2050,9 +2163,9 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
           new SnapshotBatch(table, required, None, pushed,
               SnapshotSource.aliasMapOf(tableSchema)) {
             override def planInputPartitions(): Array[InputPartition] = {
-              val (gen, files, segmented) = resolvePlan()
+              val (gen, files, segmented, rec) = resolvePlan()
               record(RowLevelScanState(gen, files.toSet, segmented))
-              files.map(SnapshotFilePartition(_)).toArray
+              opened(files, rec).map(SnapshotFilePartition(_)).toArray
             }
             // NO row-group skipping here, unlike the plain batch scan:
             // a group-based rewrite reads the FULL content of every
@@ -2064,8 +2177,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
             // files carry verbatim at commit; sub-file pruning has no
             // such carry.
             override def createReaderFactory(): PartitionReaderFactory =
-              new SnapshotReaderFactory(required, SnapshotSource.sessionConf(),
-                aliases = SnapshotSource.aliasMapOf(tableSchema))
+              new SnapshotReaderFactory(required)
           }
         override def readSchema(): StructType = required
         override def description(): String = s"SnapshotRowLevelScan($table)"
@@ -2327,8 +2439,9 @@ private[streaming] class SnapshotStreamingWrite(table: String,
 }
 
 /** Row-by-row parquet ENCODE of one staged file through the public
-  * Group API — the mirror of [[SnapshotFileReader]]'s decode, same
-  * primitive-type dispatch.
+  * Group API, in the layout [[SnapshotSource.messageTypeOf]] defines
+  * (standard annotations, three-level lists), which Spark's own parquet
+  * reader decodes on the way back.
   */
 private[streaming] class SnapshotFileWriter(path: String, schema: StructType,
     hadoopConf: Configuration) extends DataWriter[InternalRow] {
@@ -2429,220 +2542,4 @@ private[streaming] class SnapshotFileWriter(path: String, schema: StructType,
   }
 
   override def close(): Unit = ()
-}
-
-/** Row-by-row parquet decode of one data file through the public
-  * Group API; field resolution is by name against the file footer, so
-  * schema evolution degrades to nulls instead of misaligned columns.
-  */
-private[streaming] class SnapshotFileReader(path: String, schema: StructType,
-    conf: Configuration,
-    aliases: Map[String, Seq[String]] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  private val reader: ParquetReader[Group] = ParquetReader
-    .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(path))
-    .withConf(conf)
-    .build()
-
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  // Per-FILE field resolution, computed once off the first row's group
-  // type (constant for the whole file): scan-field -> file index (-1
-  // when absent) plus the file's PHYSICAL storage choices (INT96
-  // timestamps from Spark's own writer; INT64-vs-FIXED decimals per
-  // the precision split) — the per-row name lookups and footer-type
-  // checks would otherwise run once per field per row. For ARRAY
-  // fields the flags describe the list's ELEMENT type.
-  private var fieldIdx: Array[Int] = _
-  private var fieldInt96: Array[Boolean] = _
-  private var fieldLeaf:
-    Array[org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName] = _
-
-  private def resolveFields(
-      fileType: org.apache.parquet.schema.GroupType): Unit = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    // Resolution order per scan field: its own name, then the RENAME
-    // alias chain (newest first) — a pre-rename file serves the
-    // renamed column's data under the old footer name.
-    fieldIdx = schema.fields.map { f =>
-      if (fileType.containsField(f.name)) fileType.getFieldIndex(f.name)
-      else aliases.getOrElse(f.name, Seq.empty).iterator
-        .filter(fileType.containsField)
-        .map(fileType.getFieldIndex).nextOption().getOrElse(-1)
-    }
-    // The type whose physical encoding matters: the field itself, or
-    // the 3-level list's element for an array field.
-    def leafOf(i: Int): Option[org.apache.parquet.schema.PrimitiveType] = {
-      if (i < 0) return None
-      val t = fileType.getType(i)
-      if (t.isPrimitive) Some(t.asPrimitiveType())
-      else {
-        val g = t.asGroupType()
-        if (g.getFieldCount != 1) None
-        else {
-          val rep = g.getType(0)
-          if (rep.isPrimitive) Some(rep.asPrimitiveType()) // 2-level legacy
-          else {
-            val inner = rep.asGroupType()
-            if (inner.getFieldCount == 1 && inner.getType(0).isPrimitive)
-              Some(inner.getType(0).asPrimitiveType())
-            else None
-          }
-        }
-      }
-    }
-    fieldInt96 = fieldIdx.map(i => leafOf(i).exists(
-      _.getPrimitiveTypeName == PrimitiveTypeName.INT96))
-    fieldLeaf = fieldIdx.map(i =>
-      leafOf(i).map(_.getPrimitiveTypeName).orNull)
-  }
-
-  /** One decimal value off a Group field, by the file's PHYSICAL
-    * encoding (resolved once per file): INT32/INT64 carry the unscaled
-    * value directly; FIXED_LEN_BYTE_ARRAY / BINARY carry its
-    * big-endian two's-complement bytes.
-    */
-  private def decimalOf(g: Group, idx: Int, rep: Int,
-      leaf: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName,
-      d: DecimalType): org.apache.spark.sql.types.Decimal = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    leaf match {
-      case PrimitiveTypeName.INT32 =>
-        org.apache.spark.sql.types.Decimal(
-          g.getInteger(idx, rep).toLong, d.precision, d.scale)
-      case PrimitiveTypeName.INT64 =>
-        org.apache.spark.sql.types.Decimal(
-          g.getLong(idx, rep), d.precision, d.scale)
-      case _ =>
-        org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(
-          new java.math.BigInteger(g.getBinary(idx, rep).getBytes), d.scale),
-          d.precision, d.scale)
-    }
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    if (fieldIdx == null) resolveFields(g.getType)
-    val values = new Array[Any](schema.fields.length)
-    var i = 0
-    while (i < schema.fields.length) {
-      val idx = fieldIdx(i)
-      values(i) =
-        if (idx < 0 || g.getFieldRepetitionCount(idx) == 0) null
-        else schema.fields(i).dataType match {
-          // Spark's own writer stores timestamps as INT96 by default;
-          // the file footer decides which decode applies.
-          case TimestampType | TimestampNTZType if fieldInt96(i) =>
-            SnapshotSource.int96ToMicros(g.getInt96(idx, 0).getBytes)
-          case LongType | TimestampType | TimestampNTZType => g.getLong(idx, 0)
-          case IntegerType | DateType => g.getInteger(idx, 0)
-          case DoubleType => g.getDouble(idx, 0)
-          case FloatType => g.getFloat(idx, 0)
-          case BooleanType => g.getBoolean(idx, 0)
-          case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-          case BinaryType => g.getBinary(idx, 0).getBytes
-          case d: DecimalType => decimalOf(g, idx, 0, fieldLeaf(i), d)
-          // Nested shapes recurse with inline footer-type resolution
-          // (the hoisted per-file arrays cover the hot flat columns;
-          // nested members were always per-element dispatch).
-          case dt @ (_: ArrayType | _: StructType | _: MapType) =>
-            value(g, idx, 0, dt)
-          case dt => throw new UnsupportedOperationException(
-            "snapshot source: unsupported column type " +
-              s"$dt for ${schema.fields(i).name}")
-        }
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  /** One NON-NULL value off field `idx`, repetition `rep` of `g` —
-    * the recursive decode for nested shapes (arrays as three-level
-    * lists, structs as nested groups with BY-NAME member resolution so
-    * evolution inside a struct degrades to null members). Physical
-    * forms (INT96 timestamps, INT32/INT64/FIXED decimals) resolve off
-    * the group's own footer type per value.
-    */
-  private def value(g: Group, idx: Int, rep: Int,
-      dt: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    def leaf: PrimitiveTypeName = {
-      val t = g.getType.getType(idx)
-      if (t.isPrimitive) t.asPrimitiveType().getPrimitiveTypeName else null
-    }
-    dt match {
-      case TimestampType | TimestampNTZType if leaf == PrimitiveTypeName.INT96 =>
-        SnapshotSource.int96ToMicros(g.getInt96(idx, rep).getBytes)
-      case LongType | TimestampType | TimestampNTZType => g.getLong(idx, rep)
-      case IntegerType | DateType => g.getInteger(idx, rep)
-      case DoubleType => g.getDouble(idx, rep)
-      case FloatType => g.getFloat(idx, rep)
-      case BooleanType => g.getBoolean(idx, rep)
-      case StringType => UTF8String.fromBytes(g.getBinary(idx, rep).getBytes)
-      case BinaryType => g.getBinary(idx, rep).getBytes
-      case d: DecimalType => decimalOf(g, idx, rep, leaf, d)
-      case ArrayType(et, _) =>
-        // THREE-LEVEL list decode (both writers' shape): the LIST
-        // group's single repeated `list` child, one repetition per
-        // element; the optional `element` absent = null element.
-        val lg = g.getGroup(idx, rep)
-        val n = lg.getFieldRepetitionCount(0)
-        val out = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val eg = lg.getGroup(0, k)
-          out(k) =
-            if (eg.getFieldRepetitionCount(0) == 0) null
-            else value(eg, 0, 0, et)
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      case st: StructType =>
-        val sg = g.getGroup(idx, rep)
-        val t = sg.getType
-        val out = new Array[Any](st.length)
-        var k = 0
-        while (k < st.length) {
-          val f = st.fields(k)
-          val j = if (t.containsField(f.name)) t.getFieldIndex(f.name) else -1
-          out(k) =
-            if (j < 0 || sg.getFieldRepetitionCount(j) == 0) null
-            else value(sg, j, 0, f.dataType)
-          k += 1
-        }
-        new GenericInternalRow(out)
-      case MapType(kt, vt, _) =>
-        // Standard MAP decode: the map group's single repeated
-        // key_value child, key/value resolved BY NAME.
-        val mg = g.getGroup(idx, rep)
-        val n = mg.getFieldRepetitionCount(0)
-        val keys = new Array[Any](n)
-        val vals = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val kv = mg.getGroup(0, k)
-          val t = kv.getType
-          val ki = t.getFieldIndex("key")
-          val vi = if (t.containsField("value")) t.getFieldIndex("value") else -1
-          keys(k) = value(kv, ki, 0, kt)
-          vals(k) =
-            if (vi < 0 || kv.getFieldRepetitionCount(vi) == 0) null
-            else value(kv, vi, 0, vt)
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-      case other => throw new UnsupportedOperationException(
-        s"snapshot source: unsupported nested type $other")
-    }
-  }
-
-  override def close(): Unit = reader.close()
 }

@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.SnapshotTable
 
-/** The vectorized connector decode ([[SnapshotColumnarReader]]) —
-  * row/columnar parity across every supported type including nulls,
-  * schema-evolution null vectors, and the plan-shape evidence that the
-  * columnar path actually engages (the value gates alone cannot show
-  * WHICH decoder produced the rows).
+/** The connector's decode through Spark's own parquet reader
+  * ([[SnapshotReaderFactory]]) — parity with `spark.read.parquet` over
+  * the same committed files across every type including nulls, on both
+  * the vectorized and the row path; row-group skipping read off the
+  * scan's own output-row metric; schema-evolution null vectors; and the
+  * plan-shape evidence that the columnar path actually engages (the
+  * value gates alone cannot show WHICH decoder produced the rows).
   */
 class ColumnarReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -37,27 +39,24 @@ class ColumnarReadSpec extends AnyFunSuite {
         .as("dt"))
     SnapshotTable.commit(df.repartition(3), t, 1L)
 
-    def readAll(rowDecode: Boolean) = {
-      // The factory consults the property at planning; scope it to the
-      // read and restore after.
-      val saved = System.getProperty("graft.snapshot.rowDecode")
-      try {
-        if (rowDecode) System.setProperty("graft.snapshot.rowDecode", "true")
-        else System.clearProperty("graft.snapshot.rowDecode")
-        spark.read.format(provider).load(t)
-          .orderBy("k").collect().map(_.toSeq.map {
-            case a: Array[Byte] => a.toSeq
-            case v => v
-          })
-      } finally {
-        if (saved == null) System.clearProperty("graft.snapshot.rowDecode")
-        else System.setProperty("graft.snapshot.rowDecode", saved)
-      }
-    }
-    val colwise = readAll(rowDecode = false)
-    val rowwise = readAll(rowDecode = true)
-    assert(colwise.length === 10000)
-    assert(colwise.toSeq === rowwise.toSeq)
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("k").collect().map(_.toSeq.map {
+        case a: Array[Byte] => a.toSeq
+        case v => v
+      }).toSeq
+    // Ground truth: Spark's own reader over the committed files.
+    val truth = canon(spark.read.parquet(SnapshotTable.listFiles(spark, t, 1L): _*))
+    val colwise = canon(spark.read.format(provider).load(t))
+    // The row path: Spark's parquet row reader, which the factory
+    // takes whenever the vectorized reader is off.
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    spark.conf.set(key, "false")
+    val rowwise =
+      try canon(spark.read.format(provider).load(t))
+      finally spark.conf.unset(key)
+    assert(truth.length === 10000)
+    assert(colwise === truth)
+    assert(rowwise === truth)
     // And the columnar path actually engaged.
     val plan = spark.read.format(provider).load(t).select("k")
       .queryExecution.executedPlan.toString
@@ -91,33 +90,41 @@ class ColumnarReadSpec extends AnyFunSuite {
     }
     w.close()
     SnapshotTable.publish(spark, t, 1L, Seq(file))
-    val nGroups = {
+    val groupRows = {
+      import scala.jdk.CollectionConverters._
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(file), conf))
-      try r.getFooter.getBlocks.size finally r.close()
+      try r.getFooter.getBlocks.asScala.map(_.getRowCount).toSeq
+      finally r.close()
     }
+    val nGroups = groupRows.size
     assert(nGroups >= 4, s"fixture must span several row groups; got $nGroups")
-    val d0 = SnapshotColumnarReader.groupsDecoded.get()
-    val s0 = SnapshotColumnarReader.groupsSkipped.get()
-    val got = spark.read.format(provider).load(t)
-      .filter(col("k") >= 100L && col("k") <= 200L)
-      .agg(sum("v")).head().getLong(0)
+    // One execution of a one-row `sum`: its value and the rows the
+    // executed scan produced (its `numOutputRows` metric) — the decoded
+    // row groups' rows, before Spark's residual filter.
+    def run(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val v = df.collect().head.getLong(0)
+      val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) {
+          case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+        }
+      assert(scans.size === 1)
+      (v, scans.head.metrics("numOutputRows").value)
+    }
+    val (got, read) = run(spark.read.format(provider).load(t)
+      .filter(col("k") >= 100L && col("k") <= 200L).agg(sum("v")))
     assert(got === (100L to 200L).map(_ * 2).sum)
-    val decoded = SnapshotColumnarReader.groupsDecoded.get() - d0
-    val skipped = SnapshotColumnarReader.groupsSkipped.get() - s0
-    assert(decoded + skipped === nGroups.toLong,
-      s"every group must be decided: $decoded decoded + $skipped skipped != $nGroups")
-    assert(skipped > 0, "a narrow range over a sorted file must skip groups")
-    assert(decoded <= 2L,
-      s"the [100, 200] probe spans at most 2 of $nGroups sorted groups; decoded $decoded")
-    // An unfiltered scan still decodes everything (no false skips).
-    // sum, not count(): a bare count() is now answered from MANIFEST
-    // stats (the aggregate pushdown) and decodes zero groups.
-    val d1 = SnapshotColumnarReader.groupsDecoded.get()
-    assert(spark.read.format(provider).load(t).agg(sum("v")).head().getLong(0)
-      === (0L until 20000L).map(_ * 2).sum)
-    assert(SnapshotColumnarReader.groupsDecoded.get() - d1 === nGroups.toLong)
+    val twoLargest = groupRows.sorted.takeRight(2).sum
+    assert(read >= 101L && read <= twoLargest,
+      s"the [100, 200] probe spans at most 2 of $nGroups sorted groups " +
+        s"(<= $twoLargest rows together); the scan read $read rows")
+    // An unfiltered scan still reads everything (no false skips).
+    // sum, not count(): a bare count() is answered from MANIFEST stats
+    // (the aggregate pushdown) and reads no row group.
+    val (all, readAll) = run(spark.read.format(provider).load(t).agg(sum("v")))
+    assert(all === (0L until 20000L).map(_ * 2).sum)
+    assert(readAll === 20000L)
   }
 
   test("schema evolution serves null vectors for columns the file never carried") {

@@ -11,8 +11,9 @@ import graft.sources.SnapshotTable
   * round-trip the money/embedding tables need to live in the catalog:
   * both physical decimal forms (INT64 for precision ≤ 18, FIXED_LEN
   * bytes above), the three-level list encode, null arrays and null
-  * elements, parity between the connector's decoders and Spark's own
-  * parquet reader over the SAME committed files, and decode of files
+  * elements, parity between the connector (on Spark's vectorized and
+  * row readers) and `spark.read.parquet` over the SAME committed files,
+  * and decode of files
   * Spark's native writer produced (INT32-backed small decimals,
   * required list elements).
   */
@@ -44,6 +45,16 @@ class DecimalArrayReadSpec extends AnyFunSuite {
           ArrayType(DecimalType(38, 4))).as("decs"))
   }
 
+  /** `body` with Spark's vectorized parquet reader on (the default) or
+    * off — the connector decodes through Spark's reader, so this picks
+    * between its columnar and its row path.
+    */
+  private def withVectorized[A](on: Boolean)(body: => A): A = {
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.unset(key)
+  }
+
   private def canon(rows: Array[org.apache.spark.sql.Row]) =
     rows.map(_.toSeq.map {
       case a: Array[Byte] => a.toSeq
@@ -57,24 +68,15 @@ class DecimalArrayReadSpec extends AnyFunSuite {
     df.repartition(3).write.format(provider).option("path", t)
       .mode("append").save()
 
-    def readAll(rowDecode: Boolean) = {
-      val saved = System.getProperty("graft.snapshot.rowDecode")
-      try {
-        if (rowDecode) System.setProperty("graft.snapshot.rowDecode", "true")
-        else System.clearProperty("graft.snapshot.rowDecode")
-        canon(spark.read.format(provider).load(t).orderBy("k").collect())
-      } finally {
-        if (saved == null) System.clearProperty("graft.snapshot.rowDecode")
-        else System.setProperty("graft.snapshot.rowDecode", saved)
-      }
-    }
+    def readAll(vectorized: Boolean) = withVectorized(vectorized)(
+      canon(spark.read.format(provider).load(t).orderBy("k").collect()))
     // Ground truth: Spark's own parquet reader over the committed files.
     val truth = canon(spark.read
       .parquet(SnapshotTable.listFiles(spark, t, 1L): _*)
       .orderBy("k").collect())
     assert(truth.length === 5000)
-    assert(readAll(rowDecode = true) === truth)
-    assert(readAll(rowDecode = false) === truth)
+    assert(readAll(vectorized = false) === truth)
+    assert(readAll(vectorized = true) === truth)
   }
 
   test("connector decodes Spark-native-written decimal and array files") {
@@ -228,46 +230,34 @@ class DecimalArrayReadSpec extends AnyFunSuite {
     df.repartition(4).write.format(provider).option("path", t)
       .mode("append").save()
 
-    def withDecoder[A](rowDecode: Boolean)(body: => A): A = {
-      val saved = System.getProperty("graft.snapshot.rowDecode")
-      try {
-        if (rowDecode) System.setProperty("graft.snapshot.rowDecode", "true")
-        else System.clearProperty("graft.snapshot.rowDecode")
-        body
-      } finally {
-        if (saved == null) System.clearProperty("graft.snapshot.rowDecode")
-        else System.setProperty("graft.snapshot.rowDecode", saved)
-      }
-    }
-    val truth = canon(spark.read
-      .parquet(SnapshotTable.listFiles(spark, t, 1L): _*)
-      .orderBy("k").collect())
+    val files = SnapshotTable.listFiles(spark, t, 1L)
+    val truth = canon(spark.read.parquet(files: _*).orderBy("k").collect())
     assert(truth.length === 40000)
-    val rowRows = withDecoder(rowDecode = true)(
+    val rowRows = withVectorized(on = false)(
       canon(spark.read.format(provider).load(t).orderBy("k").collect()))
-    val colRows = withDecoder(rowDecode = false)(
+    val colRows = withVectorized(on = true)(
       canon(spark.read.format(provider).load(t).orderBy("k").collect()))
     assert(rowRows === truth)
     assert(colRows === truth)
     // Micro-bench, informational (a hard timing assert would flake on
     // a loaded machine): decode-dominated aggregate, warmed, min of 2.
-    def bench(rowDecode: Boolean): Long = withDecoder(rowDecode) {
+    def bench(read: => org.apache.spark.sql.DataFrame): Long = {
       def once(): Long = {
         val t0 = System.nanoTime()
-        spark.read.format(provider).load(t)
-          .selectExpr("sum(size(emb))", "sum(k)").head()
+        read.selectExpr("sum(size(emb))", "sum(k)").head()
         (System.nanoTime() - t0) / 1000000L
       }
       once() // warm
       math.min(once(), once())
     }
     info(s"array decode over 40k rows x 4-float embeddings (agg): " +
-      s"row=${bench(rowDecode = true)} ms, " +
-      s"columnar=${bench(rowDecode = false)} ms")
-    // The columnar path must actually be the one taken (the factory
-    // advertises it for this schema).
-    assert(SnapshotColumnarReader.supports(
-      spark.read.format(provider).load(t).schema))
+      s"connector=${bench(spark.read.format(provider).load(t))} ms, " +
+      s"spark.read.parquet=${bench(spark.read.parquet(files: _*))} ms")
+    // The columnar path must actually be the one taken for this schema.
+    val plan = spark.read.format(provider).load(t).select("emb")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"),
+      s"the connector read must take the vectorized path; got:\n$plan")
   }
 
   test("MIN/MAX push down to zone maps; coverage gaps and filters refuse") {

@@ -165,7 +165,7 @@ class SnapshotSourceSpec extends AnyFunSuite {
 
     // Catalyst's column pruning must reach the connector's scan: the
     // physical read schema of a single-column projection carries only
-    // that column, so the row decoder never materializes the rest.
+    // that column, so the reader never materializes the rest.
     val pruned = read(2L).select("text")
     val scans = pruned.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
